@@ -9,9 +9,11 @@ gets pushdown + pruning for free.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -49,11 +51,81 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+# Confs that change what parquet schema inference returns for the same file.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+)
+
+# (applicationId, abs path) -> (identity, schema). Only the live session's
+# entries are kept: PySpark runs one SparkContext per process, so a new
+# applicationId means every other entry belongs to a stopped session.
+_schemas: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+_schemas_lock = threading.Lock()
+
+
+def _identity(spark: SparkSession, path: str) -> tuple[tuple[str, str], tuple] | None:
+    """Cache key of ``path`` and its identity under ``spark``'s confs, or
+    None when ``path`` is not a local file or directory."""
+    try:
+        st = os.stat(path)
+    except (OSError, ValueError):
+        return None
+    ident = (st.st_ino, st.st_mtime_ns, st.st_size) + tuple(
+        spark.conf.get(k, None) for k in _INFERENCE_CONFS
+    )
+    return (spark.sparkContext.applicationId, os.path.abspath(path)), ident
+
+
+def _remember(key: tuple[str, str], ident: tuple, schema: StructType) -> None:
+    with _schemas_lock:
+        for k in [k for k in _schemas if k[0] != key[0]]:
+            del _schemas[k]
+        _schemas[key] = (ident, schema)
+
+
+def seed_schema(spark: SparkSession, path: str, schema: StructType) -> None:
+    """Record ``schema`` as what inference on ``path`` returns now — for a
+    writer that knows the schema of the files it has just put in place."""
+    found = _identity(spark, path)
+    if found is not None:
+        _remember(*found, schema)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the per-call inference job.
+
+    A plain read launches a one-task Spark job to read a footer and infer
+    the schema. Here the inferred schema is cached per session and path,
+    checked against the path's identity (inode, mtime, size) and the
+    confs that change inference; a hit reads with that schema, which plans
+    a new relation (fresh attribute ids, per-query pruning) without a job.
+    Data and DataFrames are never cached. Non-local paths (``os.stat``
+    fails) and misses take the plain read."""
+    found = _identity(spark, path)
+    if found is None:
+        return spark.read.parquet(path)
+    key, ident = found
+    hit = _schemas.get(key)
+    if hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    # the identity taken BEFORE the read: if the file changes meanwhile,
+    # the entry is stale on arrival and the next read re-infers
+    _remember(key, ident, df.schema)
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table lazily. Never caches — each query plans its own scan
-    so column pruning reflects that query's projection."""
+    """Load one table lazily. Only the schema is cached (``read_parquet``,
+    keyed by file identity); data and DataFrames never are — each query
+    plans its own scan so column pruning reflects that query's projection."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
+    path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # ts encoding has changed across testdata generations. Set the
         # legacy-nanos read conf HERE, not just in our session factory —
@@ -63,9 +135,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass  # immutable on this build; normalize_ts adapts by dtype
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        return normalize_ts(df)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        return normalize_ts(read_parquet(spark, path))
+    return read_parquet(spark, path)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import spread, table
+from ..catalog import read_parquet, spread, table
 
 ORACLE: dict[str, str] = {}
 
@@ -1481,7 +1481,7 @@ def write_layout_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def profile(layout: str) -> DataFrame:
-        back = spark.read.parquet(os.path.join(base, layout))
+        back = read_parquet(spark, os.path.join(base, layout))
         return back.select(
             F.lit(layout).alias("layout"),
             F.count(F.lit(1)).alias("n_rows"),

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import read_parquet, table
 
 ORACLE: dict[str, str] = {}
 
@@ -56,7 +56,7 @@ def write_partition_overwrite_sim(spark: SparkSession, sf_dir: str) -> DataFrame
         .option("partitionOverwriteMode", "dynamic")
         .parquet(base)
     )
-    back = spark.read.parquet(base)
+    back = read_parquet(spark, base)
     return (
         back.groupBy("o_orderpriority")
         .agg(

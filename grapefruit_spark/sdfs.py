@@ -15,6 +15,14 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from .catalog import read_parquet, seed_schema
+
+# Suffixes of the warehouse's own working directories: a generation being
+# written (``__putting``/``__merging``/``__compacting``) or swapped out
+# (``__retired``). They are never datasets.
+_INTERNAL = ("__putting", "__merging", "__retired", "__compacting")
 
 
 class Sdfs:
@@ -26,47 +34,66 @@ class Sdfs:
         os.makedirs(warehouse, exist_ok=True)
 
     def _path(self, name: str) -> str:
-        if "/" in name or name.startswith("."):
+        if "/" in name or name.startswith(".") or name.endswith(_INTERNAL):
             raise ValueError(f"invalid sdfs name: {name!r}")
         return os.path.join(self.warehouse, name)
+
+    def _rewrite(self, df: DataFrame, name: str, suffix: str,
+                 partition_by: list[str] | None = None) -> None:
+        """Write ``df`` as the next generation of ``name`` beside it, in
+        ``<name><suffix>``, then ``_swap`` it in."""
+        tmp = self._path(name) + suffix
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
+        data = [f for f in df.schema.fields if f.name not in (partition_by or ())]
+        self._swap(name, tmp, StructType(data))
+
+    def _swap(self, name: str, tmp: str, data_schema: StructType) -> None:
+        """Put the generation written at ``tmp`` in place of ``name``.
+
+        The old generation is renamed aside, the new one renamed in, then
+        the old one removed: the path is absent only for the instant
+        between the two renames, and a crash there leaves the data at
+        ``<name>__retired`` (a truly gapless swap needs a symlink flip or
+        versioned directories). Then seeds the schema cache from the data
+        columns written, so the next ``get`` skips inference: a read with
+        them infers only the partition columns, from directory names,
+        without launching a job."""
+        final = self._path(name)
+        old = final + "__retired"
+        if os.path.isdir(old):
+            shutil.rmtree(old)
+        if os.path.isdir(final):
+            os.rename(final, old)
+        os.rename(tmp, final)
+        if os.path.isdir(old):
+            shutil.rmtree(old)
+        seed_schema(self.spark, final, self.spark.read.schema(data_schema).parquet(final).schema)
 
     # -- file ops (SdfsServer.java put/get/delete) ----------------------
     def put(self, df: DataFrame, name: str, mode: str = "overwrite",
             partition_by: list[str] | None = None) -> None:
         """Insert/update a dataset (reference: ``put local sdfsname``).
 
-        An overwrite of an EXISTING dataset writes beside and swaps via
-        two renames, so (a) the path is absent only for the instant
-        between the two renames (vs the whole rmtree+rewrite window of a
-        naive overwrite; a crash there leaves the data recoverable at
-        ``<name>__retired`` — a truly gapless swap needs a symlink flip
-        or versioned directories) and (b) a ``df`` derived from this same
+        An overwrite writes beside and swaps (``_swap``), so readers never
+        see a half-written dataset and a ``df`` derived from this same
         dataset can't be clobbered mid-plan by Spark's delete-then-write
         overwrite."""
-        final = self._path(name)
-        if mode == "overwrite" and os.path.isdir(final):
-            tmp = self._path(f"{name}__putting")
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(tmp)
-            old = self._path(f"{name}__retired")
-            if os.path.isdir(old):
-                shutil.rmtree(old)
-            os.rename(final, old)
-            os.rename(tmp, final)
-            shutil.rmtree(old)
+        if mode == "overwrite":
+            self._rewrite(df, name, "__putting", partition_by)
             return
         writer = df.write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(final)
+        writer.parquet(self._path(name))
 
     def get(self, name: str) -> DataFrame:
         """Fetch a dataset (reference: ``get sdfsname local``)."""
         if not self.exists(name):
             raise FileNotFoundError(f"sdfs file not found: {name}")
-        return self.spark.read.parquet(self._path(name))
+        return read_parquet(self.spark, self._path(name))
 
     def delete(self, name: str) -> bool:
         """Delete a dataset (reference: ``delete sdfsname``)."""
@@ -96,6 +123,7 @@ class Sdfs:
         return sorted(
             d for d in os.listdir(self.warehouse)
             if os.path.isdir(os.path.join(self.warehouse, d))
+            and not d.endswith(_INTERNAL)
         )
 
     def global_(self) -> dict[str, int]:
@@ -115,12 +143,7 @@ class Sdfs:
         re-replication healing in SdfsServer.java — same maintenance
         slot, storage-layer concern.)
         """
-        df = self.get(name)
-        tmp = self._path(f"{name}__compacting")
-        df.repartition(target_files).write.mode("overwrite").parquet(tmp)
-        final = self._path(name)
-        shutil.rmtree(final)
-        os.rename(tmp, final)
+        self._rewrite(self.get(name).repartition(target_files), name, "__compacting")
         return len(self.ls(name))
 
     def auto_compact(self, max_files: int = 16, target_files: int = 4) -> dict[str, int]:
@@ -142,8 +165,12 @@ class Sdfs:
         CDC-apply step of an incremental ingest pipeline.
 
         Plan shape: one left-anti join of the stored table against the
-        (usually much smaller, broadcastable) distinct update keys —
-        survivors union updates. Written beside and atomically renamed:
+        (usually much smaller, broadcastable) update keys — survivors
+        union updates. The keys are not deduplicated first: a left-anti
+        join drops the same rows whatever duplicates its right side
+        holds, and a ``distinct`` would only add two aggregate stages and
+        a shuffle. Every update row is kept, repeated keys included.
+        Written beside and swapped in (``_rewrite``):
         a Spark job can never overwrite a path it is reading, and
         readers never observe a half-merged table. At warehouse scale
         the same shape runs partition-wise (only partitions containing
@@ -154,18 +181,6 @@ class Sdfs:
         if not self.exists(name):
             self.put(updates, name)
             return
-        current = self.get(name)
-        keys = updates.select(*key_cols).distinct()
-        survivors = current.join(keys, key_cols, "left_anti")
+        survivors = self.get(name).join(updates.select(*key_cols), key_cols, "left_anti")
         merged = survivors.unionByName(updates)
-        tmp = self._path(f"{name}__merging")
-        merged.write.mode("overwrite").parquet(tmp)
-        final = self._path(name)
-        # two renames, not rmtree-then-rename: the table path is never
-        # ABSENT — a reader either sees the old generation or the new one
-        old = self._path(f"{name}__retired")
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(final, old)
-        os.rename(tmp, final)
-        shutil.rmtree(old)
+        self._rewrite(merged, name, "__merging")

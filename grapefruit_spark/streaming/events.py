@@ -327,8 +327,10 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     size stats while it fits the threshold, and degrades to a per-batch
     shuffle join at 100 TB — a forced hint would OOM the executors there.
     """
+    from ..catalog import read_parquet
+
     ev = read_event_stream(spark, sf_dir)
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_parquet(spark, f"{sf_dir}/customer.parquet").select(
         F.col("c_custkey"), F.col("c_mktsegment")
     )
     return ev.join(cust, ev.user_id == cust.c_custkey, "left").select(
@@ -523,9 +525,6 @@ def maintain_event_rollup(
     readers never see a half-merged state; the stream checkpoint makes
     increments exactly-once across restarts.
     """
-    import os
-    import shutil
-
     ev = _event_stream(
         spark, src_dir, "*.parquet", max_files_per_trigger=max_files_per_trigger
     )
@@ -555,21 +554,10 @@ def maintain_event_rollup(
         merged = merged.withColumn(
             "sum_value", F.col("sum_value").cast("decimal(38,6)")
         )
-        # write beside, then two renames — the table path is never ABSENT
-        # (an rmtree-then-rename swap leaves a window where a reader finds
-        # no table at all)
-        tmp = fs._path(f"{name}__delta")
-        merged.write.mode("overwrite").parquet(tmp)
-        final = fs._path(name)
-        if os.path.isdir(final):
-            old = fs._path(f"{name}__retired")
-            if os.path.isdir(old):
-                shutil.rmtree(old)
-            os.rename(final, old)
-            os.rename(tmp, final)
-            shutil.rmtree(old)
-        else:
-            os.rename(tmp, final)
+        # put writes beside and swaps the new generation in: readers never
+        # see a half-written table, and ``merged`` (which reads the stored
+        # table) is never overwritten mid-plan
+        fs.put(merged, name)
 
     run_foreach_batch(ev, sink, checkpoint_dir)
 

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -258,3 +260,47 @@ def test_sdfs_merge_empty_updates_is_noop(spark, tmp_path):
     fs.put(base, "t")
     fs.merge("t", base.where("k < 0"), ["k"])  # empty update set
     assert {(r["k"], r["v"]) for r in fs.get("t").collect()} == {(1, 10.0)}
+
+
+def test_sdfs_compact_leaves_no_working_dirs(spark, tmp_path):
+    """compact swaps through ``__retired`` like put and merge: the data
+    reads back complete and no ``<name>__*`` directory is left behind."""
+    wh = tmp_path / "wh6"
+    fs = Sdfs(spark, str(wh))
+    fs.put(spark.range(1000).repartition(12), "t")
+    assert fs.compact("t", 3) == 3
+    got = fs.get("t")
+    assert got.count() == 1000
+    assert got.agg(F.sum("id")).collect()[0][0] == sum(range(1000))
+    assert sorted(os.listdir(wh)) == ["t"]
+
+
+def test_sdfs_merge_keeps_every_row_of_a_repeated_key(spark, tmp_path):
+    """An update batch that repeats a key: the stored rows of that key are
+    dropped once, and every update row is kept (survivors ∪ updates)."""
+    fs = Sdfs(spark, str(tmp_path / "wh7"))
+    schema = "k long, v double"
+    fs.put(spark.createDataFrame([(1, 1.0), (2, 2.0), (3, 3.0)], schema), "t")
+    updates = spark.createDataFrame([(2, 20.0), (2, 21.0), (4, 40.0), (4, 41.0)], schema)
+    fs.merge("t", updates, ["k"])
+    got = sorted((r["k"], r["v"]) for r in fs.get("t").collect())
+    assert got == [(1, 1.0), (2, 20.0), (2, 21.0), (3, 3.0), (4, 40.0), (4, 41.0)]
+
+
+def test_sdfs_hides_internal_dirs(spark, tmp_path):
+    """A leftover working directory of a crashed operation is not a
+    dataset: not listed, not compacted, not addressable by name."""
+    wh = tmp_path / "wh8"
+    fs = Sdfs(spark, str(wh))
+    fs.put(spark.range(10), "t")
+    for leftover in ("t__retired", "t__merging", "u__putting", "u__compacting"):
+        spark.range(40).repartition(20).write.parquet(str(wh / leftover))
+    assert fs.store() == ["t"]
+    assert fs.global_() == {"t": len(fs.ls("t"))}
+    assert fs.auto_compact(max_files=16, target_files=4) == {}
+    assert len(os.listdir(wh / "t__retired")) > 16
+    for bad in ("t__retired", "x__merging", "x__putting", "x__compacting"):
+        with pytest.raises(ValueError):
+            fs.get(bad)
+        with pytest.raises(ValueError):
+            fs.put(spark.range(1), bad)
