@@ -222,11 +222,10 @@ HEADLINE = [
     # dedup_clusters_star improvement — run-order/host effects aliasing
     # between rows that share a cost shape (the same LSH pair-graph
     # build, each timed from scratch). Keeping the three builds and the
-    # memo consumers ADJACENT in one fixed order makes every row's run
+    # cluster consumers ADJACENT in one fixed order makes every row's run
     # context identical round-over-round, so a delta on one row is that
-    # row's delta. Builders first (their timed runs bypass the memo and
-    # track the full from-scratch build), the star alternative beside
-    # its twin, then the marginal-cost memo consumers.
+    # row's delta. Builders first, the star alternative beside its twin,
+    # then the consumers.
     "dedup_clusters",
     "dedup_clusters_star",
     "jaccard_clusters",
@@ -351,8 +350,8 @@ EXCLUDED = {
     "cli_sim": "CLI introspection simulation: driver-side, no engine work",
 }
 
-#: the memoized-cluster builders and their consumers (see graph.py r10
-#: memo block) — used only for the disclosure field in the JSON record
+#: the connected-components builders and their consumers — used only for
+#: the disclosure field in the JSON record
 CLUSTER_FAMILY = [
     "dedup_clusters",
     "dedup_keep_best",
@@ -363,9 +362,9 @@ CLUSTER_FAMILY = [
     "split_leakage_safe",
 ]
 
-#: r14 fit/baseline memo families (operators/_memo.py): builders first,
-#: then the rows that consume the shared artifact under the memo —
-#: disclosure field in the JSON record, mirroring CLUSTER_FAMILY
+#: the fit/baseline families: builders first, then the rows that compose
+#: the same fitted artifact — disclosure field in the JSON record,
+#: mirroring CLUSTER_FAMILY
 FIT_FAMILY = [
     "knn_bruteforce",
     "knn_recall_eval",
@@ -379,31 +378,26 @@ FIT_FAMILY = [
     "quality_classifier_score",
     "quality_classifier_logit",
     "quality_classifier_logit_score",
-    # r14 optimization round: the two Lloyd k-means fits are shared
-    # artifacts too — builders knn_ivf_trained (k=IVF_CELLS fit; probe
-    # curve + ivf recall eval consume) and kmeans_embeddings
-    # (k=KMEANS_K fit; semantic_dedup consumes)
+    # the two Lloyd k-means fits: knn_ivf_trained (k=IVF_CELLS fit; probe
+    # curve + ivf recall eval compose it) and kmeans_embeddings
+    # (k=KMEANS_K fit; semantic_dedup composes it)
     "knn_ivf_trained",
     "kmeans_embeddings",
     "semantic_dedup",
 ]
 
-#: r14 (optimization round): the four supplier ranking rows share one
-#: memoized (src, dst, out_deg) links frame — supplier_pagerank is the
-#: builder (its timed runs bypass the memo and track the full edge
-#: build), the other three measure their ranking loops over the shared
-#: edge table (the _dist rows' distributed loops still run per row —
-#: only the edge build is shared). Disclosure field, mirroring
-#: CLUSTER_FAMILY / FIT_FAMILY.
+#: the four supplier ranking rows build the same (src, dst, out_deg)
+#: links frame, and the copurchase rows the same pair-count frame.
+#: Disclosure field, mirroring CLUSTER_FAMILY / FIT_FAMILY.
 GRAPH_FAMILY = [
     "supplier_pagerank",
     "supplier_pagerank_dist",
     "supplier_ppr",
     "supplier_ppr_dist",
-    # the copurchase rows share the raw pair-count frame
-    # (_copurchase_pairs; builder: copurchase_triangles).
-    # copurchase_lift is NOT in the family — its counts are over the
-    # distinct (order, part) basket, a different multiset.
+    # the copurchase rows build the raw pair-count frame
+    # (_copurchase_pairs). copurchase_lift is NOT in the family — its
+    # counts are over the distinct (order, part) basket, a different
+    # multiset.
     "copurchase_triangles",
     "copurchase_kcore",
     "copurchase_adamic_adar",
@@ -508,69 +502,6 @@ def main() -> None:
     # inflate loadavg, so only the pre-session reading reflects ambient
     # pressure from other processes
     load_start, quiet_wait = _wait_for_quiet()
-    # Session cluster memo (graph.py r10): ON by default for bench —
-    # the family consumers then measure the marginal cost of each
-    # report over one shared CC frame, the shape a real pipeline runs.
-    # Disclosed as "cluster_memo" in the record; disable with
-    # GRAPEFRUIT_CLUSTER_MEMO=0 to bench every query from scratch (the
-    # driver's correctness gate never sets the var, so its checks stay
-    # independent from-scratch proofs either way).
-    memo_on = os.environ.get("GRAPEFRUIT_CLUSTER_MEMO", "1") == "1"
-    if memo_on:
-        os.environ["GRAPEFRUIT_CLUSTER_MEMO"] = "1"
-    else:
-        os.environ.pop("GRAPEFRUIT_CLUSTER_MEMO", None)
-    # r14 (VERDICT_r13 #3): the memo now also covers the exact ANN
-    # baseline (knn_bruteforce feeds the six recall rows + probe curve)
-    # and the two classifier weight tables (their score rows re-derive
-    # the fit). BUILDER rows keep timing the full from-scratch build
-    # (their timed runs bypass the memo, exactly like the CC builders);
-    # consumer rows then measure marginal cost over the shared artifact
-    # — the one-artifact-many-consumers shape a production pipeline runs.
-    # Builder row → the memo KINDS whose from-scratch build that row's
-    # timed runs must pay (GRAPEFRUIT_MEMO_SKIP, per-kind — r14 opt
-    # round; see operators/_memo.py:_skip_kinds). A builder still READS
-    # memo kinds it merely consumes (charged to THEIR builder rows), so
-    # each shared artifact's construction is timed by exactly one row.
-    memo_builders = (
-        {
-            "dedup_clusters": "minhash_cc",
-            "jaccard_clusters": "jaccard_cc",
-            "knn_bruteforce": "knn_exact",
-            "quality_classifier_fit": "qc_ridge_fit",
-            "quality_classifier_logit": "qc_logit_fit",
-            "supplier_pagerank": "supplier_links",
-            "copurchase_triangles": "copurchase_pairs",
-            # r14 optimization round: the two k-means fits (see
-            # FIT_FAMILY note) — these rows keep timing the full
-            # from-scratch Lloyd training
-            "knn_ivf_trained": "ivf_kmeans_fit",
-            "kmeans_embeddings": "kmeans_k8_fit",
-            # r14 opt: the BPE merge-table fit was memoized in the r14
-            # build work with NO builder row (both bpe rows read it
-            # after their warmup populated it — nobody timed the fit);
-            # bpe_merge_sequence now pays it
-            "bpe_merge_sequence": "bpe_merges",
-            # r14 opt: pair graphs, minhash signatures, duplicate-run
-            # tables, backoff score table, covariance rows and PQ/OPQ
-            # codebooks are shared artifacts too — each with one
-            # builder row
-            "condorcet_pairs": "condorcet_pairs",
-            "dedup_minhash": "minhash_grams,minhash_sigs,minhash_pairs",
-            "ngram_jaccard_pairs": "ngram_pairs,gram_index",
-            "dup_span_docs": "dup_fps",
-            "dup_run_stats": "dup_runs",
-            "doc_backoff_surprisal": "backoff_scores",
-            # emb_cov (the collected Gram rows) has no skip entry: the
-            # embedding_covariance row's own plan IS the scan, so it
-            # times the artifact's build without ever reading the memo
-            "knn_sq8": "sq8_stats",
-            "knn_ivf_pq": "pq_fit_raw",
-            "knn_ivf_opq": "pq_fit_opq",
-        }
-        if memo_on
-        else {}
-    )
     spark = get_spark("grapefruit-bench")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
@@ -597,13 +528,7 @@ def main() -> None:
             fn = queries[name]
             # run 1 (untimed) pays one-time costs: janino codegen compile,
             # file-footer listing, sink init; run 2 is engine steady state.
-            # For the two memo BUILDERS this run also populates the shared
-            # cluster memo for later family consumers — their own timed
-            # runs below then bypass the memo so the builder rows keep
-            # tracking the full from-scratch CC build round-over-round.
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            if name in memo_builders:
-                os.environ["GRAPEFRUIT_MEMO_SKIP"] = memo_builders[name]
             best = float("inf")
             for _ in range(3):
                 t0 = time.perf_counter()
@@ -619,8 +544,6 @@ def main() -> None:
             errors[name] = f"{type(e).__name__}: {e}"[:300]
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
         finally:
-            if name in memo_builders:
-                os.environ.pop("GRAPEFRUIT_MEMO_SKIP", None)
             # drop persisted frames (dedup signature caches etc.) so queries
             # don't evict each other's storage memory as the session grows —
             # each query is measured cold-cache / warm-codegen
@@ -628,19 +551,10 @@ def main() -> None:
             # also release localCheckpoint blocks (reliability.pin) —
             # clearCache only covers the DF cache, and pinned RDDs from
             # the dedup/graph operators would otherwise accumulate across
-            # the 60-query session. The memoized cluster frames are the
-            # one exception: their lineage is truncated, so dropping
-            # their blocks would KILL later family consumers, not slow
-            # them — spare exactly those ids.
-            keep: set[int] = set()
-            if memo_on:
-                from grapefruit_spark.operators.graph import cluster_memo_rdd_ids
-
-                keep = cluster_memo_rdd_ids(spark)
+            # the 60-query session.
             jsc = spark.sparkContext._jsc
             for rid in list(jsc.getPersistentRDDs().keySet().toArray()):
-                if rid not in keep:
-                    jsc.sc().unpersistRDD(rid, False)
+                jsc.sc().unpersistRDD(rid, False)
 
     calib_numpy.append(_calib_numpy())
     calib_jvm_end = _calib_jvm(spark)
@@ -695,24 +609,17 @@ def main() -> None:
         # as bench_full.json's round record (protocol above)
         "calib_in_band": calib_in_band,
         "value_norm": round(total / calib_ratio, 3),
-        # r10: the dedup family (CLUSTER_FAMILY) shares one memoized CC
-        # frame per builder when true — consumer rows are the marginal
-        # report cost; the two builder rows still time the from-scratch
-        # build (their timed runs bypass the memo)
-        "cluster_memo": memo_on,
+        # every row is timed from scratch; the two memo fields stay so
+        # this record reads like-for-like against older records that
+        # timed family consumers over a shared artifact
+        "cluster_memo": False,
         "cluster_family_total": round(
             sum(timings[n] for n in CLUSTER_FAMILY if n in timings), 3
         ),
-        # r14: the fit/baseline memo families (consumer rows are
-        # marginal-cost when true — like the cluster consumers, their
-        # round-over-round deltas vs pre-r14 records include the memo
-        # win; builder rows still track the from-scratch build)
-        "fit_memo": memo_on,
+        "fit_memo": False,
         "fit_family_total": round(
             sum(timings[n] for n in FIT_FAMILY if n in timings), 3
         ),
-        # r14 opt round: the supplier ranking rows share one memoized
-        # links frame (builder: supplier_pagerank; see GRAPH_FAMILY)
         "graph_family_total": round(
             sum(timings[n] for n in GRAPH_FAMILY if n in timings), 3
         ),
@@ -721,7 +628,7 @@ def main() -> None:
         "excluded_n": len(EXCLUDED),
         "excluded": sorted(EXCLUDED),
     }
-    prev = _common_prev_summary(timings, sf, memo_on)
+    prev = _common_prev_summary(timings, sf)
     if prev:
         out.update(prev)
         for k in ("common_now_total", "selfnow_total"):
@@ -734,7 +641,7 @@ def main() -> None:
     # window (calib 1.27-1.45 for the whole r11 session) makes raw
     # drift read as engine drift. The anchor is pinned to BENCH_r05.json
     # (the oldest stable-registry record) so the gate doesn't ratchet.
-    anchor = _anchor_summary(timings, sf, memo_on, calib_ratio)
+    anchor = _anchor_summary(timings, sf, calib_ratio)
     if anchor:
         out.update(anchor)
     if errors:
@@ -754,19 +661,16 @@ def main() -> None:
     print(json.dumps(out))
 
 
-#: CLUSTER_FAMILY rows whose timed cost depends on the memo mode — the
-#: two builders (dedup_clusters, jaccard_clusters) always time the
-#: from-scratch build (their timed runs bypass the memo), so only the
-#: consumer rows become marginal-cost under memo_on
+#: CLUSTER_FAMILY rows that older records with "cluster_memo": true timed
+#: as marginal cost over a shared cluster frame — the two builders
+#: (dedup_clusters, jaccard_clusters) were always timed from scratch
 _CLUSTER_CONSUMERS = frozenset(CLUSTER_FAMILY) - {
     "dedup_clusters",
     "jaccard_clusters",
 }
 
 
-def _common_prev_summary(
-    timings: dict[str, float], sf: float, memo_on: bool = True
-) -> dict:
+def _common_prev_summary(timings: dict[str, float], sf: float) -> dict:
     """Headline totals stop being comparable as the suite grows, so also
     report the total over the query set SHARED with the latest recorded
     round (BENCH_r*.json beside the repo) — the like-for-like number.
@@ -776,9 +680,9 @@ def _common_prev_summary(
     DIFFERENT scale factor are skipped — comparing timings across SFs
     reads as a spurious huge regression/improvement. Likewise (ADVICE
     r10) CLUSTER_FAMILY consumer rows are excluded from the shared set
-    when the two runs' cluster-memo modes differ — a consumer measured
-    from-scratch in the old record vs marginal-cost now would read a
-    memo win as an engine win; the exclusion count is disclosed."""
+    when the old record ran with the cluster memo — a consumer measured
+    marginal-cost there vs from-scratch now would read a memo win as an
+    engine regression; the exclusion count is disclosed."""
     import glob
 
     root = os.path.dirname(os.path.abspath(__file__))
@@ -787,7 +691,7 @@ def _common_prev_summary(
 
     def _shared(rec: dict) -> tuple[list[str], int]:
         names = set(rec["queries"]) & set(timings)
-        if bool(rec.get("cluster_memo")) != memo_on:
+        if rec.get("cluster_memo"):
             dropped = len(names & _CLUSTER_CONSUMERS)
             names -= _CLUSTER_CONSUMERS
         else:
@@ -841,9 +745,7 @@ ANCHOR_RECORD = "BENCH_r05.json"
 ANCHOR_GATE_MAX = 1.05
 
 
-def _anchor_summary(
-    timings: dict[str, float], sf: float, memo_on: bool, calib_ratio: float
-) -> dict:
+def _anchor_summary(timings: dict[str, float], sf: float, calib_ratio: float) -> dict:
     """The primary round-over-round gate (r12 protocol): compare the
     CALIBRATION-NORMALIZED total over the query set shared with the
     pinned r5 anchor against the anchor's own total. Raw ratio is
@@ -854,7 +756,7 @@ def _anchor_summary(
     if not rec or rec.get("sf") != sf:
         return {}
     names = set(rec["queries"]) & set(timings)
-    if bool(rec.get("cluster_memo")) != memo_on:
+    if rec.get("cluster_memo"):
         names -= _CLUSTER_CONSUMERS
     names = sorted(names)
     if not names:

@@ -84,13 +84,13 @@ def main(argv: list[str] | None = None) -> int:
     from .maplejuice import juice, maple
     from .sdfs import Sdfs
     from .session import get_spark
-    from .sources import read_any, write_any
+    from .sources import read_any
 
     spark = get_spark("grapefruit-cli")
     fs = Sdfs(spark, args.warehouse)
 
     if args.cmd == "put":
-        write_any(read_any(spark, args.local, fmt=args.fmt), fs._path(args.name))
+        fs.put(read_any(spark, args.local, fmt=args.fmt), args.name)
     elif args.cmd == "get":
         fs.get(args.name).write.mode("overwrite").parquet(args.local)
     elif args.cmd == "delete":
@@ -125,18 +125,17 @@ def main(argv: list[str] | None = None) -> int:
         from .maplejuice import juice_pipe
 
         src = fs.get(args.src_name)
+        sink = dict(fs=fs, src_name=args.src_name, dest_name=args.out_name,
+                    delete_input=args.delete_input)
         if os.path.exists(args.exe.split()[0]):
             if args.shuffle == "range":
                 raise SystemExit("executable juice supports hash shuffle only")
-            out = juice_pipe(src, args.exe, num_juices=args.num_juices)
+            juice_pipe(src, args.exe, num_juices=args.num_juices, **sink)
         else:
-            out = juice(
+            juice(
                 src, _load_exe(args.exe), args.schema,
-                num_juices=args.num_juices, shuffle=args.shuffle,
+                num_juices=args.num_juices, shuffle=args.shuffle, **sink,
             )
-        fs.put(out, args.out_name)
-        if args.delete_input:
-            fs.delete(args.src_name)
     elif args.cmd == "demo":
         from .operators import all_queries
 

@@ -151,19 +151,8 @@ class MapleJuicePipeline:
         self.stage_name = stage_name
 
     def _next(self, out: DataFrame, dest_name: str | None, delete_input: bool):
-        if self.fs is not None and dest_name is not None:
-            # materialize BEFORE deleting the input: the reference deletes
-            # only after the juice output lands in SDFS, and so do we
-            self.fs.put(out, dest_name)
-            if delete_input and self.stage_name is not None:
-                self.fs.delete(self.stage_name)
-            return MapleJuicePipeline(self.fs.get(dest_name), self.fs, dest_name)
-        if delete_input:
-            raise ValueError(
-                "delete_input requires materialized mode (fs + dest_name): "
-                "a lazily composed stage has no stored input to delete"
-            )
-        return MapleJuicePipeline(out, self.fs)
+        out = _finish_juice(out, self.fs, self.stage_name, dest_name, delete_input)
+        return MapleJuicePipeline(out, self.fs, dest_name if self.fs is not None else None)
 
     def maple(self, fn: MapleFn, output_schema: str, num_maples: int | None = None,
               dest_name: str | None = None):
@@ -190,10 +179,15 @@ def maple_pipe(df: DataFrame, exe: str) -> DataFrame:
     process per partition, rows streamed through, output re-ingested as a
     (key, value) DataFrame for the juice shuffle.
     """
-    spark = df.sparkSession
     lines = df.rdd.map(
         lambda r: "\t".join("" if v is None else str(v) for v in r)
     ).pipe(exe)
+    return _kv_lines_frame(df.sparkSession, lines)
+
+
+def _kv_lines_frame(spark, lines) -> DataFrame:
+    """An executable's ``key\\tvalue`` output lines as a (key, value)
+    DataFrame; a line with no tab is dropped."""
     kv = (
         lines.map(lambda ln: ln.split("\t", 1))
         .filter(lambda p: len(p) == 2)
@@ -219,7 +213,6 @@ def juice_pipe(
     """
     from pyspark.rdd import portable_hash
 
-    spark = kv.sparkSession
     parted = (
         kv.rdd.map(lambda r: (str(r[0]), str(r[1])))
         .repartitionAndSortWithinPartitions(
@@ -230,10 +223,5 @@ def juice_pipe(
         )
     )
     out = parted.map(lambda p: f"{p[0]}\t{p[1]}").pipe(exe)
-    res = (
-        out.map(lambda ln: ln.split("\t", 1))
-        .filter(lambda p: len(p) == 2)
-        .map(lambda p: (p[0], p[1]))
-    )
-    reduced = spark.createDataFrame(res, "key string, value string")
+    reduced = _kv_lines_frame(kv.sparkSession, out)
     return _finish_juice(reduced, fs, src_name, dest_name, delete_input)

@@ -171,9 +171,8 @@ _REPROVE_SINCE: dict[str, int] = {
     # gate SF, oracle text changed; the score row embeds the fit CTEs
     "quality_classifier_logit": 14,
     "quality_classifier_logit_score": 14,
-    # r14 (ADVICE_r13): minhash_band_curve fails loudly when
-    # GRAPEFRUIT_BAND_CURVE_SAMPLE changed after import — values
-    # identical, guard path added
+    # r14 (ADVICE_r13): minhash_band_curve gained a guard on its
+    # corpus-sample setting — values identical, guard path added
     "minhash_band_curve": 14,
     # r14 (VERDICT_r13 #5): pii_redact extended with SSN/IPv4/IPv6 and
     # Luhn-verified credit-card masking (new count columns + the CC

@@ -167,22 +167,7 @@ def _gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (df > SHINGLE_DF_CAP) are dropped from the intersection sets while
     full sizes still feed the denominators. Pinned (one materialization)
     because candidate generation and verification both read it.
-
-    r14: the pinned index rides the session memo as "gram_index" when
-    active — BOTH pair rows (Jaccard and containment) open with this
-    identical build; builder row ngram_jaccard_pairs times it from
-    scratch, and the driver's gate always recomputes it.
     """
-    from ._memo import memo_active, memoized_frame
-
-    if memo_active("gram_index"):
-        return memoized_frame(
-            spark, sf_dir, "gram_index", lambda: _gram_index_build(spark, sf_dir)
-        )
-    return _gram_index_build(spark, sf_dir)
-
-
-def _gram_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..reliability import pin
 
     # materialize hashed shingles ONCE: project-collapse otherwise
@@ -346,20 +331,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     never generate candidates — and the exact intersection is computed
     per candidate from the two docs' gram arrays, so total cost is
     O(candidates), not Σdf² over every df≤CAP gram.
-
-    The verified pair frame is a shared artifact (jaccard_clusters
-    builds the CC map from it): it flows through the session memo as
-    "ngram_pairs" when active — bit-identical, the memo only skips
-    recomputation of a deterministic frame.
     """
-    from ._memo import memoized_frame
-
-    return memoized_frame(
-        spark, sf_dir, "ngram_pairs", lambda: _ngram_jaccard_pairs_build(spark, sf_dir)
-    )
-
-
-def _ngram_jaccard_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _gram_index(spark, sf_dir)
     pp = _prefix_posting(idx, JACCARD_NUM, JACCARD_DEN)
     a, b = pp.alias("a"), pp.alias("b")
@@ -495,43 +467,6 @@ def _sigs_from_gram_arrays(gh: DataFrame, seed: int = 42) -> DataFrame:
     return gh.select("doc_id", F.array(*mins).alias("sig"))
 
 
-def _shared_grams(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The corpus (doc_id, gh) distinct-shingle-hash frame through the
-    session memo, or None when the memo isn't active for it (driver
-    correctness gate; the builder row dedup_minhash's timed runs). r14
-    optimization, VERDICT_r13 #3 pattern: the gram/signature pipeline is
-    the shared front of dedup_minhash, minhash_est_error and
-    minhash_band_curve — a production dedup computes signatures once per
-    corpus snapshot and every tuning/QA report reads them."""
-    from ._memo import memo_active, memoized_frame
-
-    if not memo_active("minhash_grams"):
-        return None
-    return memoized_frame(
-        spark,
-        sf_dir,
-        "minhash_grams",
-        lambda: minhash_grams(table(spark, sf_dir, "documents")),
-    )
-
-
-def _shared_sigs(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The corpus 64-perm signature frame through the session memo (see
-    _shared_grams), or None when the memo isn't active for it."""
-    from ._memo import memo_active, memoized_frame
-
-    if not memo_active("minhash_sigs"):
-        return None
-
-    def build() -> DataFrame:
-        gh = _shared_grams(spark, sf_dir)
-        if gh is None:
-            return minhash_signatures(table(spark, sf_dir, "documents"))
-        return _sigs_from_gram_arrays(gh)
-
-    return memoized_frame(spark, sf_dir, "minhash_sigs", build)
-
-
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup pairs (the 100 TB dedup path).
 
@@ -540,34 +475,18 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, band) rows — O(n·bands) shuffle, versus O(pairs) for the exact
     variant. rows-only gate (hash family is ours); recall covered by
     planted-duplicate tests against ngram_jaccard_pairs.
-
-    The verified pair frame itself is a shared artifact (dedup_clusters
-    builds the CC map from it): it flows through the session memo as
-    "minhash_pairs" when active — bit-identical, the memo only skips
-    recomputation of a deterministic frame.
     """
-    from ._memo import memoized_frame
-
-    return memoized_frame(
-        spark, sf_dir, "minhash_pairs", lambda: _dedup_minhash_build(spark, sf_dir)
-    )
-
-
-def _dedup_minhash_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the signature pipeline is consumed three times (bands, sig_a,
     # sig_b) and its lambda expressions defeat ReuseExchange
     # canonicalization — persist so it computes once. Signatures are
     # compact (64 longs/doc, ~0.5 KB) and MEMORY_AND_DISK spills rather
     # than OOMs at corpus scale; LRU eviction reclaims it afterwards.
-    # (Through the session memo the frame is already pinned — reuse it.)
     from pyspark.storagelevel import StorageLevel
 
-    sigs = _shared_sigs(spark, sf_dir)
-    if sigs is None:
-        sigs = minhash_signatures(table(spark, sf_dir, "documents")).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        sigs.count()  # materialize before fan-out
+    sigs = minhash_signatures(table(spark, sf_dir, "documents")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    sigs.count()  # materialize before fan-out
     banded = sigs.select(
         "doc_id", F.explode(band_keys(F.col("sig"), LSH_BANDS, LSH_ROWS)).alias("bk")
     )
@@ -713,16 +632,10 @@ def minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries doesn't retain the O(corpus) gram arrays forever (r10,
     ADVICE_r9).
     """
-    # r14: grams/signatures ride the session memo when active (builder
-    # row: dedup_minhash); from scratch otherwise — same frames either way
-    gh = _shared_grams(spark, sf_dir)
-    if gh is None:
-        gh = minhash_grams(table(spark, sf_dir, "documents")).localCheckpoint(
-            eager=True  # grams feed signatures AND the exact verify
-        )
-    sigs = _shared_sigs(spark, sf_dir)
-    if sigs is None:
-        sigs = _sigs_from_gram_arrays(gh).localCheckpoint(eager=True)
+    gh = minhash_grams(table(spark, sf_dir, "documents")).localCheckpoint(
+        eager=True  # grams feed signatures AND the exact verify
+    )
+    sigs = _sigs_from_gram_arrays(gh).localCheckpoint(eager=True)
     banded = sigs.select(
         "doc_id", F.explode(band_keys(F.col("sig"), LSH_BANDS, LSH_ROWS)).alias("bk")
     )
@@ -1086,44 +999,6 @@ def _span_fps_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shared_fps(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The pinned span-fingerprint frame through the session memo, or
-    None when the memo isn't active for it (driver correctness gate;
-    the builder row dup_span_docs' timed runs). r14 optimization,
-    VERDICT_r13 #3 pattern: five registry rows (dup_span_docs,
-    dedup_spans_apply, dup_run_stats, dup_run_threshold_curve,
-    dedup_runs_apply) open with the identical tokenize + md5-per-span
-    pass — a production exact-substring dedup fingerprints the corpus
-    once and every report/apply step reads the fingerprints."""
-    from ._memo import memo_active, memoized_frame
-
-    if not memo_active("dup_fps"):
-        return None
-    return memoized_frame(
-        spark, sf_dir, "dup_fps", lambda: _span_fps_frame(spark, sf_dir)
-    )
-
-
-def _shared_runs(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The maximal-duplicate-runs frame (doc_id, run_start, run_len)
-    through the session memo (see _shared_fps), or None when the memo
-    isn't active for it (builder row: dup_run_stats)."""
-    from ._memo import memo_active, memoized_frame
-
-    if not memo_active("dup_runs"):
-        return None
-
-    def build() -> DataFrame:
-        arr = _shared_fps(spark, sf_dir)
-        if arr is None:
-            from ..reliability import pin
-
-            arr = pin(_span_fps_frame(spark, sf_dir))
-        return _dup_runs(arr)
-
-    return memoized_frame(spark, sf_dir, "dup_runs", build)
-
-
 def dup_span_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-level exact-duplicate detection: every 8-token span occurring
     in ≥2 documents, with its document frequency and total occurrences —
@@ -1141,11 +1016,7 @@ def dup_span_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprint INSIDE the array, then pin before exploding: without
     # the barrier, project-collapse inlines the span expression into
     # Generate, which re-evaluates it per exploded row (~tokens× per doc).
-    # r14: the pinned frame rides the session memo when active (this row
-    # is its builder — bench times the from-scratch fingerprint pass here)
-    arr = _shared_fps(spark, sf_dir)
-    if arr is None:
-        arr = pin(_span_fps_frame(spark, sf_dir))
+    arr = pin(_span_fps_frame(spark, sf_dir))
     spans = arr.select("doc_id", F.explode("fps").alias("span_fp"))
     # two-level agg instead of countDistinct+count in one pass: the mixed
     # distinct/non-distinct agg plans an Expand (row duplication before
@@ -1205,29 +1076,17 @@ def dedup_spans_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..reliability import pin
 
     docs = _spread(table(spark, sf_dir, "documents"))
-    # r14: with the session memo active the fingerprint frame is shared
-    # (builder: dup_span_docs) and the token arrays — consumed ONCE, by
-    # the final join — need no pin of their own; from scratch, the
-    # combined (toks, fps) pin is built exactly as before
-    fps_arr = _shared_fps(spark, sf_dir)
-    if fps_arr is None:
-        arr = pin(
-            docs.select(
-                "doc_id",
-                ws_tokens(normalize_text(F.col("text"))).alias("toks"),
-                F.transform(
-                    word_ngrams(ws_tokens(normalize_text(F.col("text"))), SPAN_W),
-                    lambda s: F.md5(s),
-                ).alias("fps"),
-            )
+    arr = pin(
+        docs.select(
+            "doc_id",
+            ws_tokens(normalize_text(F.col("text"))).alias("toks"),
+            F.transform(
+                word_ngrams(ws_tokens(normalize_text(F.col("text"))), SPAN_W),
+                lambda s: F.md5(s),
+            ).alias("fps"),
         )
-    else:
-        arr = docs.select(
-            "doc_id", ws_tokens(normalize_text(F.col("text"))).alias("toks")
-        )
-    pos_fp = (fps_arr if fps_arr is not None else arr).select(
-        "doc_id", F.posexplode("fps").alias("pos", "fp")
     )
+    pos_fp = arr.select("doc_id", F.posexplode("fps").alias("pos", "fp"))
     dup_fps = (
         pos_fp.groupBy("fp", "doc_id")
         .agg(F.count(F.lit(1)).alias("occ"))
@@ -1415,15 +1274,7 @@ def dup_run_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..reliability import pin
 
-    # r14: this row BUILDS the shared runs frame (bench times the island
-    # merge from scratch here) over the shared fingerprint frame
-    # (builder: dup_span_docs); fully from scratch with the memo off
-    runs = _shared_runs(spark, sf_dir)
-    if runs is None:
-        arr = _shared_fps(spark, sf_dir)
-        if arr is None:
-            arr = pin(_span_fps_frame(spark, sf_dir))
-        runs = _dup_runs(arr)
+    runs = _dup_runs(pin(_span_fps_frame(spark, sf_dir)))
     per_doc = runs.groupBy("run_len", "doc_id").agg(
         F.count(F.lit(1)).alias("n_runs_doc")
     )
@@ -1469,15 +1320,7 @@ def dup_run_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..reliability import pin
 
-    # r14: the runs frame rides the session memo when active (builders:
-    # dup_run_stats for the island merge, dup_span_docs for the
-    # fingerprints); the sweep itself is O(runs × thresholds)
-    runs = _shared_runs(spark, sf_dir)
-    if runs is None:
-        arr = _shared_fps(spark, sf_dir)
-        if arr is None:
-            arr = pin(_span_fps_frame(spark, sf_dir))
-        runs = _dup_runs(arr)
+    runs = _dup_runs(pin(_span_fps_frame(spark, sf_dir)))
     thr = spark.createDataFrame(
         [(t,) for t in RUN_CURVE_THRESHOLDS], schema="min_run_tokens int"
     )
@@ -1537,28 +1380,17 @@ def dedup_runs_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..reliability import pin
 
     docs = _spread(table(spark, sf_dir, "documents"))
-    # r14: with the session memo active the runs frame is shared
-    # (builders: dup_run_stats / dup_span_docs) and the token arrays —
-    # consumed once, by the final join — need no pin; from scratch, the
-    # combined (toks, fps) pin is built exactly as before
-    runs = _shared_runs(spark, sf_dir)
-    if runs is None:
-        arr = pin(
-            docs.select(
-                "doc_id",
-                ws_tokens(normalize_text(F.col("text"))).alias("toks"),
-                F.transform(
-                    word_ngrams(ws_tokens(normalize_text(F.col("text"))), SPAN_W),
-                    lambda s: F.md5(s),
-                ).alias("fps"),
-            )
+    arr = pin(
+        docs.select(
+            "doc_id",
+            ws_tokens(normalize_text(F.col("text"))).alias("toks"),
+            F.transform(
+                word_ngrams(ws_tokens(normalize_text(F.col("text"))), SPAN_W),
+                lambda s: F.md5(s),
+            ).alias("fps"),
         )
-        runs = _dup_runs(arr.select("doc_id", "fps"))
-    else:
-        arr = docs.select(
-            "doc_id", ws_tokens(normalize_text(F.col("text"))).alias("toks")
-        )
-    runs = runs.where(F.col("run_len") >= MIN_RUN_TOKENS)
+    )
+    runs = _dup_runs(arr.select("doc_id", "fps")).where(F.col("run_len") >= MIN_RUN_TOKENS)
     per_doc = runs.groupBy("doc_id").agg(
         F.collect_list(
             F.struct(
@@ -1845,18 +1677,6 @@ BAND_SWEEP = ((32, 2), (16, 4), (8, 8))
 _LAST_BAND_CURVE_PLAN = ""
 
 
-def _band_curve_frac() -> float:
-    """The band-curve corpus-sample fraction, read ONCE at module import
-    so the Spark operator and its registered oracle can never disagree
-    about the sample (ADVICE_r12)."""
-    import os
-
-    return float(os.environ.get("GRAPEFRUIT_BAND_CURVE_SAMPLE", "1.0"))
-
-
-_BAND_CURVE_FRAC = _band_curve_frac()
-
-
 def minhash_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH band-shape tuning curve — the datasketch/FAISS-style sweep
     that picks (bands, rows) for a target Jaccard threshold: with the
@@ -1889,44 +1709,13 @@ def minhash_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself an emitted value, so a single 64-bit collision at corpus
     scale would silently inflate it. Raw r=2 slices are ~2×20 digits,
     barely wider than the hash they replace.
-
-    100 TB knob: the tuning table does not need the full corpus —
-    set ``GRAPEFRUIT_BAND_CURVE_SAMPLE`` (fraction in (0, 1]) BEFORE
-    the module imports to sweep a deterministic md5-threshold sample of
-    documents. Default 1.0 (whole corpus). The knob is read ONCE at
-    import and mirrored into the registered ORACLE (ADVICE_r12: a
-    Spark-only filter would make any parity/hash run under the env var
-    report engine divergence that is actually sampling), so the pair
-    stays hash-comparable at every setting. A post-import change to the
-    env var therefore CANNOT take effect — the call-time guard below
-    fails loudly instead of silently sweeping the frozen fraction
-    (ADVICE_r13).
     """
     from pyspark.storagelevel import StorageLevel
 
-    live = _band_curve_frac()
-    if live != _BAND_CURVE_FRAC:
-        raise RuntimeError(
-            "GRAPEFRUIT_BAND_CURVE_SAMPLE changed after import "
-            f"({_BAND_CURVE_FRAC} frozen vs {live} now); the oracle was "
-            "registered with the import-time value — set the env var "
-            "before importing grapefruit_spark.operators.dedup"
-        )
-    docs = table(spark, sf_dir, "documents")
-    sigs = None
-    if _BAND_CURVE_FRAC < 1.0:
-        gate = F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("bigint") % 1_000_000
-        docs = docs.where(gate < int(_BAND_CURVE_FRAC * 1_000_000))
-    else:
-        # r14: the whole-corpus signature frame rides the session memo
-        # when active (builder row: dedup_minhash); a sampled sweep is a
-        # DIFFERENT doc set, so it never touches the shared frame
-        sigs = _shared_sigs(spark, sf_dir)
-    if sigs is None:
-        sigs = minhash_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
-        sigs.count()
+    sigs = minhash_signatures(table(spark, sf_dir, "documents")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    sigs.count()
     sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     est = F.round(
@@ -2069,20 +1858,12 @@ FROM {n}_scored"""
     )
 )"""
     stats = " UNION ALL ".join(f"({s})" for s in stat_rows)
-    # mirror the import-time sample knob (ADVICE_r12): same md5-threshold
-    # gate as the Spark side, so a sampled run stays hash-comparable
-    gate = (
-        f"\n    WHERE ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))"
-        f"::BIGINT % 1000000 < {int(_BAND_CURVE_FRAC * 1_000_000)}"
-        if _BAND_CURVE_FRAC < 1.0
-        else ""
-    )
     return f"""
 WITH tk AS (
     SELECT doc_id,
            list_filter(string_split_regex({_DUCK_NORM}, '\\s+'),
                        t -> length(t) > 0) AS tks
-    FROM documents{gate}
+    FROM documents
 ),
 {_minhash_sig_ctes("tk", "", seed)}
 {"".join(cfg_ctes)}

@@ -23,42 +23,6 @@ ORACLE: dict[str, str] = {}
 
 MAX_ITERS = 10
 
-# ------------------------------------------------------------- r10 memo
-# Session-scoped cluster-frame memo (VERDICT_r9 order #4). Five gate
-# queries consume a connected-components output (dedup_clusters feeds
-# dedup_keep_best / dedup_cluster_stats / doc_dup_ratio_by_source;
-# jaccard_clusters feeds split_leakage_safe), and each independently
-# recomputes the pair graph + iterative CC so the driver's correctness
-# gate stays a from-scratch proof. A real pipeline computes the cluster
-# map ONCE per corpus snapshot and fans it out to every consumer, so
-# bench / pipeline runs opt in via GRAPEFRUIT_CLUSTER_MEMO=1.
-# r14: the machinery generalized into operators/_memo.py (VERDICT_r13
-# #3 — the classifier fits and the exact ANN baseline now share it);
-# these wrappers keep the established graph-side API.
-from ._memo import memoized_frame as _memoized_frame
-from ._memo import clear_memo as _clear_memo
-from ._memo import memo_rdd_ids as _memo_rdd_ids
-
-
-def _memoized_clusters(spark: SparkSession, sf_dir: str, kind: str, build):
-    return _memoized_frame(spark, sf_dir, kind, build)
-
-
-def cluster_memo_rdd_ids(spark: SparkSession) -> set[int]:
-    """RDD ids backing live memoized frames for THIS session (cluster
-    frames AND the r14 additions) — a block-storage sweep (bench.py's
-    per-query cleanup) must spare these, because a localCheckpointed
-    frame whose blocks are dropped cannot recompute (its lineage is
-    truncated by design)."""
-    return _memo_rdd_ids(spark)
-
-
-def clear_cluster_memo() -> None:
-    """Release every memoized frame's storage and empty the session
-    memo (all kinds)."""
-    _clear_memo()
-
-
 #: edge sets up to this many rows run the whole min-label fixpoint in one
 #: numpy kernel (a single applyInPandas group ≈ ~32 MB Arrow batch) —
 #: the same small-graph tier pagerank() uses (PR_FUSED_MAX_EDGES, same
@@ -286,21 +250,14 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5_hash60 (r6): the oracle replays the whole signature → band →
     verify pipeline and closes the pair graph with a recursive CTE, so
     the iterative min-label loop is driver-verified end-to-end.
-
-    Honors the session cluster memo (GRAPEFRUIT_CLUSTER_MEMO=1): the
-    four dedup-family consumers then share one CC computation per
-    corpus snapshot instead of rebuilding it, as a real pipeline would.
     """
     from .dedup import dedup_minhash
 
-    def build() -> DataFrame:
-        pairs = dedup_minhash(spark, sf_dir)
-        comps = connected_components(pairs, "doc_a", "doc_b")
-        return comps.select(
-            F.col("node").alias("doc_id"), F.col("component").alias("keep_doc_id")
-        )
-
-    return _memoized_clusters(spark, sf_dir, "minhash_cc", build)
+    pairs = dedup_minhash(spark, sf_dir)
+    comps = connected_components(pairs, "doc_a", "doc_b")
+    return comps.select(
+        F.col("node").alias("doc_id"), F.col("component").alias("keep_doc_id")
+    )
 
 
 def _dedup_clusters_oracle() -> str:
@@ -557,7 +514,7 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min-id keeper; unhinted join — membership scales with dup mass) ×
     token_count's ws_tokens. One groupBy(source) after the joins; the
     ppm ratio is exact bigint div with a nullif(0) guard on both
-    engines. Honors the session cluster memo like its siblings.
+    engines.
     """
     from ..catalog import table as _table
     from .text import token_count
@@ -632,21 +589,14 @@ def jaccard_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label machinery (connected_components), but the edge set is the
     SQL-expressible ngram_jaccard_pairs, so DuckDB can replay the whole
     thing as a recursive transitive closure and the driver hash-checks
-    the iterative loop end-to-end.
-
-    Honors the session cluster memo (GRAPEFRUIT_CLUSTER_MEMO=1), which
-    split_leakage_safe rides — the exact-join pair graph is the repo's
-    heaviest single computation, and a pipeline builds it once."""
+    the iterative loop end-to-end."""
     from .dedup import ngram_jaccard_pairs
 
-    def build() -> DataFrame:
-        pairs = ngram_jaccard_pairs(spark, sf_dir)
-        comps = connected_components(pairs, "doc_a", "doc_b")
-        return comps.select(
-            F.col("node").alias("doc_id"), F.col("component").alias("keep_doc_id")
-        )
-
-    return _memoized_clusters(spark, sf_dir, "jaccard_cc", build)
+    pairs = ngram_jaccard_pairs(spark, sf_dir)
+    comps = connected_components(pairs, "doc_a", "doc_b")
+    return comps.select(
+        F.col("node").alias("doc_id"), F.col("component").alias("keep_doc_id")
+    )
 
 
 def _jaccard_clusters_oracle() -> str:
@@ -924,24 +874,9 @@ def supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _supplier_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pinned (src, dst, out_deg) supplier links frame, shared by
-    all four supplier ranking rows through the session memo (r14,
-    VERDICT_r13 #3 pattern): a real pipeline builds the edge table once
-    per corpus snapshot and ranks against it many times. Values are
-    bit-identical either way — the memo only skips recomputation of a
-    deterministic frame; with the memo off (the driver's correctness
-    gate, and the bench builder row supplier_pagerank's timed runs)
-    every call builds from scratch. The rankings themselves — including
-    both _dist rows' distributed loops — run per row regardless; only
-    the edge build is shared."""
-    from ._memo import memoized_frame
-
-    return memoized_frame(
-        spark,
-        sf_dir,
-        "supplier_links",
-        lambda: _pr_links(supplier_edges(spark, sf_dir)),
-    )
+    """The pinned (src, dst, out_deg) supplier links frame of all four
+    supplier ranking rows."""
+    return _pr_links(supplier_edges(spark, sf_dir))
 
 
 def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1222,30 +1157,23 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join — the shared edge primitive of copurchase_triangles /
     copurchase_kcore (which use the distinct pair SET, = this frame's
     keys) and copurchase_adamic_adar (which filters on the raw
-    multiplicity n_cooc). Shared through the session memo (r14,
-    VERDICT_r13 #3 pattern; builder row: copurchase_triangles): a real
-    pipeline materializes the co-occurrence table once and derives
-    every graph report from it. copurchase_lift stays separate — its
+    multiplicity n_cooc). copurchase_lift stays separate — its
     counts are over the DISTINCT (order, part) basket, a different
     multiset. repartition(u) first: hashpartitioning(u) satisfies the
     (u, v) aggregate's distribution, one shuffle instead of two."""
-    from ._memo import memoized_frame
     from ..catalog import table
 
-    def build() -> DataFrame:
-        li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-        b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-        return (
-            a.join(b, "k")
-            .where(F.col("u") < F.col("v"))
-            .repartition("u")
-            .groupBy("u", "v")
-            .agg(F.count(F.lit(1)).alias("n_cooc"))
-            .transform(pin)
-        )
-
-    return memoized_frame(spark, sf_dir, "copurchase_pairs", build)
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
+    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
+    return (
+        a.join(b, "k")
+        .where(F.col("u") < F.col("v"))
+        .repartition("u")
+        .groupBy("u", "v")
+        .agg(F.count(F.lit(1)).alias("n_cooc"))
+        .transform(pin)
+    )
 
 
 #: pair sets up to this many rows run the whole orient→wedge→close
@@ -1402,9 +1330,8 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     graphs run the distributed pipeline — same integer census either
     way.
     """
-    # the pinned shared pair frame's keys ARE the distinct edge set the
-    # old in-operator self-join + distinct + pin produced (r14: shared
-    # with kcore/adamic_adar through _copurchase_pairs' session memo)
+    # the pinned pair frame's keys ARE the distinct edge set the old
+    # in-operator self-join + distinct + pin produced
     edges = _copurchase_pairs(spark, sf_dir).select("u", "v")
     if TRI_FUSED_MAX_EDGES > 0 and edges.count() <= TRI_FUSED_MAX_EDGES:
         counts = _triangles_fused(edges)
@@ -1688,9 +1615,9 @@ ORACLE["copurchase_kcore"] = _kcore_oracle()
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected part co-purchase edges (u < v, distinct). Shared by
-    copurchase_kcore and the cross-SF invariant tests. r14: the
-    distinct pair set is exactly the shared pair frame's keys (see
-    _copurchase_pairs) — kcore rides the family memo with the others."""
+    copurchase_kcore and the cross-SF invariant tests. The distinct
+    pair set is exactly the pair-count frame's keys (see
+    _copurchase_pairs)."""
     return _copurchase_pairs(spark, sf_dir).select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     )

@@ -20,6 +20,29 @@ ORACLE: dict[str, str] = {}
 
 
 # ------------------------------------------------------------------ A1/A2/A6
+def cli_wc_maple(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Wordcount maple of mj_wordcount and cli_sim — module-level so the
+    CLI's ``module:function`` exe loader (cli._load_exe) can name it.
+
+    A per-batch COMBINER (the reference's own WebGraph maple pre-sums
+    counts before the shuffle): emits (word, partial_count) instead of
+    (word, 1) — the summing juice is unchanged, the shuffle carries
+    |vocab| rows per batch instead of |tokens|."""
+    from collections import Counter
+
+    c: Counter = Counter()
+    for t in pdf["text"]:
+        # null text contributes no tokens (the exe path gets this for
+        # free from the pipe framing: None serializes to an empty line)
+        if isinstance(t, str):
+            c.update(t.lower().split())
+    return pd.DataFrame({"key": list(c.keys()), "value": list(c.values())})
+
+
+def cli_wc_juice(key, grp: pd.DataFrame) -> pd.DataFrame:
+    return pd.DataFrame({"word": [key], "cnt": [int(grp["value"].sum())]})
+
+
 def mj_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WordCount via the generic maple/juice API (hash shuffle).
 
@@ -31,27 +54,8 @@ def mj_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch over the single-row-group local scan (integer counts,
     # partitioning-free; the reference CLI's num_maples knob, derived)
     docs = spread(table(spark, sf_dir, "documents").select("text"))
-
-    def wc_maple(pdf: pd.DataFrame) -> pd.DataFrame:
-        # per-batch COMBINER (the reference's own WebGraph maple pre-sums
-        # counts before the shuffle): emit (word, partial_count) instead
-        # of (word, 1) — the summing juice is unchanged, the shuffle
-        # carries |vocab| rows per batch instead of |tokens|
-        from collections import Counter
-
-        c: Counter = Counter()
-        for t in pdf["text"]:
-            # null text contributes no tokens (the exe path gets this for
-            # free from the pipe framing: None serializes to an empty line)
-            if isinstance(t, str):
-                c.update(t.lower().split())
-        return pd.DataFrame({"key": list(c.keys()), "value": list(c.values())})
-
-    def wc_juice(key, grp: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"word": [key], "cnt": [int(grp["value"].sum())]})
-
-    kv = maple(docs, wc_maple, "key string, value int")
-    return juice(kv, wc_juice, "word string, cnt bigint", shuffle="hash")
+    kv = maple(docs, cli_wc_maple, "key string, value int")
+    return juice(kv, cli_wc_juice, "word string, cnt bigint", shuffle="hash")
 
 
 ORACLE["mj_wordcount"] = """
@@ -194,20 +198,7 @@ def condorcet_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Self-join of the ballot relation on orderkey gives every ordered pair
     exactly once (rk_a < rk_b); a single groupBy replaces the reference's
     intermediate-file shuffle.
-
-    The majority-reduced pair matrix is stage 1's OUTPUT FILE in the
-    reference (stage 2 reads it): it flows through the session memo as
-    "condorcet_pairs" when active (r14; builder row condorcet_pairs —
-    bit-identical, the memo only skips recomputation).
     """
-    from ._memo import memoized_frame
-
-    return memoized_frame(
-        spark, sf_dir, "condorcet_pairs", lambda: _condorcet_pairs_build(spark, sf_dir)
-    )
-
-
-def _condorcet_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = _ballots(spark, sf_dir)
     a = b.alias("a")
     c = b.alias("c")
@@ -269,13 +260,7 @@ def condorcet_winner(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SUBTREE is the full ballots shuffle, and the three consumers below
     # (cands, wins, n_cand) would otherwise each recompute it (measured
     # ~2× the stage-1 time at the 100 MB baseline scale without this).
-    # r14: with the session memo active it arrives already pinned
-    # (builder row: condorcet_pairs — the reference's stage-1 file)
-    from ._memo import memo_active
-
-    pairs = condorcet_pairs(spark, sf_dir)
-    if not memo_active("condorcet_pairs"):
-        pairs = pin(pairs)
+    pairs = pin(condorcet_pairs(spark, sf_dir))
     cands = pairs.select(F.col("cand_lo").alias("cand")).union(
         pairs.select(F.col("cand_hi").alias("cand"))
     ).distinct()
@@ -387,23 +372,6 @@ FROM customer
 
 
 # ----------------------------------------------------------------- A11/A12
-def cli_wc_maple(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Module-level wordcount maple for the CLI's ``module:function`` exe
-    loader (cli._load_exe imports by path — a closure can't be named on
-    a command line). Same combiner shape as mj_wordcount's."""
-    from collections import Counter
-
-    c: Counter = Counter()
-    for t in pdf["text"]:
-        if isinstance(t, str):
-            c.update(t.lower().split())
-    return pd.DataFrame({"key": list(c.keys()), "value": list(c.values())})
-
-
-def cli_wc_juice(key, grp: pd.DataFrame) -> pd.DataFrame:
-    return pd.DataFrame({"word": [key], "cnt": [int(grp["value"].sum())]})
-
-
 def cli_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible CLI lifecycle (A12) + membership introspection
     (A11): the full reference session a user types at the prompt —

@@ -120,26 +120,12 @@ def kmeans_fit(
 
 def _km_centroids(spark: SparkSession, sf_dir: str) -> np.ndarray:
     """The (k=KMEANS_K, KMEANS_ITERS) Lloyd fit over the embeddings
-    table, shared by kmeans_embeddings and semantic_dedup through the
-    session memo (r14 optimization; VERDICT_r13 #3 pattern — a real
-    pipeline trains the cluster model once per corpus snapshot and both
-    the profile report and SemDeDup consume the stored centroids).
-    kmeans_fit's driver fold is deterministic (partials folded in
-    sorted order), so a recomputation is bit-identical — the memo only
-    skips it. With the memo off (the driver's correctness gate, and the
-    bench builder row kmeans_embeddings' timed runs) every call trains
-    from scratch."""
-    from ._memo import memoized_rows
-
-    rows = memoized_rows(
-        spark,
-        sf_dir,
-        "kmeans_k8_fit",
-        lambda: kmeans_fit(
-            spark, table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        )[0].tolist(),
-    )
-    return np.array(rows, dtype=np.float64)
+    table, shared by kmeans_embeddings and semantic_dedup. kmeans_fit's
+    driver fold is deterministic (partials folded in sorted order), so
+    both consumers see bit-identical centroids."""
+    return kmeans_fit(
+        spark, table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    )[0]
 
 
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -470,23 +470,7 @@ def doc_backoff_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization and the floor(avg·10⁶) emission — the
     doc_bigram_surprisal parity contract — are bit-unchanged; what
     changes is the shuffle bill: the corpus-sized tf frame crosses the
-    network twice (score join + doc rollup) instead of six times.
-
-    The per-doc score table is a shared artifact (doc_perplexity_buckets
-    buckets it — CCNet's "write the scores table" step): it flows
-    through the session memo as "backoff_scores" when active
-    (bit-identical; the memo only skips recomputation)."""
-    from ._memo import memoized_frame
-
-    return memoized_frame(
-        spark,
-        sf_dir,
-        "backoff_scores",
-        lambda: _doc_backoff_surprisal_build(spark, sf_dir),
-    )
-
-
-def _doc_backoff_surprisal_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    network twice (score join + doc rollup) instead of six times."""
     from .datapipe import _U32, _bucket
 
     # r14: catalog.spread measured HERE: 2.19 -> 2.73 s — the fan-out
@@ -702,18 +686,13 @@ def doc_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # as its own broadcast job, outside ReuseExchange's reach) —
     # measured 4.0 s vs 2.4 s for one surprisal pass at sf0.1. At scale
     # this is CCNet's "write the scores table" step.
-    from ._memo import memo_active
-
-    scored = doc_backoff_surprisal(spark, sf_dir).select(
-        "doc_id",
-        "n_trigrams",
-        F.expr(f"avg_surprisal_e6 div {PPLX_BIN_E6}").alias("bin"),
+    scored = pin(
+        doc_backoff_surprisal(spark, sf_dir).select(
+            "doc_id",
+            "n_trigrams",
+            F.expr(f"avg_surprisal_e6 div {PPLX_BIN_E6}").alias("bin"),
+        )
     )
-    if not memo_active("backoff_scores"):
-        # r14: with the memo active the score table is already a pinned
-        # shared frame (builder: doc_backoff_surprisal) — this select is
-        # a trivial map over it; from scratch, pin as before
-        scored = pin(scored)
     from pyspark.sql.window import Window as _W
 
     bins = scored.groupBy("bin").agg(F.count(F.lit(1)).alias("c"))
@@ -1180,13 +1159,6 @@ def quality_classifier_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigint div truncates identically in both engines — with bias
     feature QC_BIAS = 1024 on EVERY document (gramless docs carry only
     the bias).
-
-    The weight table honors the session memo (GRAPEFRUIT_CLUSTER_MEMO=1,
-    VERDICT_r13 #3): the scoring row composes the same fit, and a real
-    deployment broadcasts ONE stored weight artifact — under the memo
-    the fit runs once per corpus snapshot. Values bit-identical either
-    way (the driver gate never sets the var, so its proof stays
-    from-scratch).
     """
     return spark.createDataFrame(
         _qc_fit_rows(spark, sf_dir), schema="feat int, weight_e6 bigint"
@@ -1194,14 +1166,6 @@ def quality_classifier_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _qc_fit_rows(spark: SparkSession, sf_dir: str) -> list[tuple[int, int]]:
-    from ._memo import memoized_rows
-
-    return memoized_rows(
-        spark, sf_dir, "qc_ridge_fit", lambda: _qc_fit_rows_build(spark, sf_dir)
-    )
-
-
-def _qc_fit_rows_build(spark: SparkSession, sf_dir: str) -> list[tuple[int, int]]:
     import numpy as np
     import pandas as pd
 
@@ -1407,8 +1371,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-derive the un-floored weights? No: score from the EMITTED e6
     # weights so the scoring row composes the fit row's proven values —
     # both engines then share bit-identical weights and the only float
-    # is the final dot product of exact integers scaled once. Under the
-    # session memo the fit computes once (VERDICT_r13 #3).
+    # is the final dot product of exact integers scaled once.
     wmap = dict(_qc_fit_rows(spark, sf_dir))
 
     docs = table(spark, sf_dir, "documents")
@@ -1581,11 +1544,6 @@ def quality_classifier_logit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ 5·10¹¹, so |w| ≤ LOGIT_ITERS·5·10¹¹ = 8·10¹² and |z_num| ≤
     65·1024·|w| ≈ 5·10¹⁷ — 18× inside int64 regardless of n_docs.
 
-    The weight table honors the session memo (GRAPEFRUIT_CLUSTER_MEMO=1,
-    VERDICT_r13 #3) like the ridge fit: under it the 16 distributed
-    passes run once per corpus snapshot and the scoring row reuses the
-    table. Values bit-identical either way.
-
     r15: corpora ≤ LOGIT_FUSED_MAX_DOCS run all GD steps in one numpy
     kernel (see the constant's int64-safety rationale and
     _logit_fused_rows' exactness note); larger corpora keep the
@@ -1593,17 +1551,6 @@ def quality_classifier_logit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     return spark.createDataFrame(
         _logit_weight_rows(spark, sf_dir), schema="feat int, weight_e12 bigint"
-    )
-
-
-def _logit_weight_rows(spark: SparkSession, sf_dir: str) -> list[tuple[int, int]]:
-    from ._memo import memoized_rows
-
-    return memoized_rows(
-        spark,
-        sf_dir,
-        "qc_logit_fit",
-        lambda: _logit_weight_rows_build(spark, sf_dir),
     )
 
 
@@ -1660,7 +1607,7 @@ def _logit_fused_rows(base, n_docs: int) -> list[tuple[int, int]]:
     return [(int(r["feat"]), int(r["w"])) for r in out]
 
 
-def _logit_weight_rows_build(
+def _logit_weight_rows(
     spark: SparkSession,
     sf_dir: str,
     fused_max_docs: int = -1,

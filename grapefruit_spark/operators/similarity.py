@@ -33,38 +33,28 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking shuffles only (query × corpus) scored pairs. cos rounded to
     6 dp BEFORE ranking so Spark and the oracle rank identically.
 
-    This frame is the shared BASELINE of the six knn_*_recall_eval rows
-    (each re-derives it for the driver's from-scratch proof), so it
-    honors the session memo (GRAPEFRUIT_CLUSTER_MEMO=1, VERDICT_r13
-    #3): one exact pass per corpus snapshot, every recall row then pays
-    only its own index — the artifact-reuse shape a 100 TB ANN QA
-    deployment actually runs. Values bit-identical either way.
+    This frame is the exact baseline of the six knn_*_recall_eval rows.
     """
-    from ._memo import memoized_frame
-
-    def build() -> DataFrame:
-        emb = table(spark, sf_dir, "embeddings")
-        q = emb.where(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-        )
-        c = emb.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")
-        )
-        scored = c.join(
-            broadcast(q), F.col("query_id") != F.col("neighbor_id")
-        ).withColumn(
-            "cos_sim", F.round(cosine_similarity(F.col("qvec"), F.col("cvec")), 6)
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cos_sim"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= TOP_K)
-            .select("query_id", "neighbor_id", "cos_sim", "rank")
-        )
-
-    return memoized_frame(spark, sf_dir, "knn_exact", build)
+    emb = table(spark, sf_dir, "embeddings")
+    q = emb.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    )
+    c = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")
+    )
+    scored = c.join(
+        broadcast(q), F.col("query_id") != F.col("neighbor_id")
+    ).withColumn(
+        "cos_sim", F.round(cosine_similarity(F.col("qvec"), F.col("cvec")), 6)
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_sim"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= TOP_K)
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    )
 
 
 ORACLE["knn_bruteforce"] = f"""
@@ -379,27 +369,17 @@ IVF_TRAIN_ITERS = 4
 def _ivf_trained_centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[float]]]:
     """The (k=IVF_CELLS, IVF_TRAIN_ITERS) Lloyd fit over the embeddings
     table, shared by knn_ivf_trained / knn_ivf_recall_eval /
-    knn_probe_curve through the session memo (r14 optimization;
-    VERDICT_r13 #3 pattern — one trained index artifact, many
-    consumers). kmeans_fit's driver fold is deterministic, so a
-    recomputation is bit-identical; with the memo off (the driver's
-    correctness gate, and the bench builder row knn_ivf_trained's timed
-    runs) every call trains from scratch."""
-    from ._memo import memoized_rows
+    knn_probe_curve. kmeans_fit's driver fold is deterministic, so every
+    consumer sees bit-identical centroids."""
     from .ml import kmeans_fit
 
-    rows = memoized_rows(
+    cents = kmeans_fit(
         spark,
-        sf_dir,
-        "ivf_kmeans_fit",
-        lambda: kmeans_fit(
-            spark,
-            table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
-            k=IVF_CELLS,
-            iters=IVF_TRAIN_ITERS,
-        )[0].tolist(),
-    )
-    return [(int(i), [float(x) for x in c]) for i, c in enumerate(rows)]
+        table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
+        k=IVF_CELLS,
+        iters=IVF_TRAIN_ITERS,
+    )[0]
+    return [(int(i), [float(x) for x in c]) for i, c in enumerate(cents.tolist())]
 
 
 def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -761,32 +741,22 @@ FROM agg
 
 
 # ----------------------------------------------------------------- D62
-def _sq8_stats(spark: SparkSession, sf_dir: str, emb: DataFrame):
+def _sq8_stats(emb: DataFrame):
     """(mins, rngs): the per-dim min/max quantization grid — a trained
     SQ8 index artifact shared by knn_sq8, knn_ivf_sq8 and their recall
-    rows (r14: session memo kind "sq8_stats", builder row knn_sq8; the
-    driver's gate and the builder's timed runs recompute the identical
-    64-row aggregate from scratch)."""
-    from ._memo import memoized_rows
-
-    stats_rows = memoized_rows(
-        spark,
-        sf_dir,
-        "sq8_stats",
-        lambda: [
-            (int(r["dim"]), float(r["mn"]), float(r["mx"]))
-            for r in (
-                emb.select(F.posexplode("embedding").alias("dim", "x"))
-                .select("dim", F.col("x").cast("double").alias("x"))
-                .groupBy("dim")
-                .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-                .orderBy("dim")
-                .collect()
-            )
-        ],
+    rows."""
+    stats_rows = (
+        emb.select(F.posexplode("embedding").alias("dim", "x"))
+        .select("dim", F.col("x").cast("double").alias("x"))
+        .groupBy("dim")
+        .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
+        .orderBy("dim")
+        .collect()
     )
-    mins = np.array([r[1] for r in stats_rows], dtype=np.float64)
-    rngs = np.array([r[2] - r[1] for r in stats_rows], dtype=np.float64)
+    mins = np.array([float(r["mn"]) for r in stats_rows], dtype=np.float64)
+    rngs = np.array(
+        [float(r["mx"]) - float(r["mn"]) for r in stats_rows], dtype=np.float64
+    )
     return mins, rngs
 
 
@@ -815,7 +785,7 @@ def knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     upstream; this op assumes its gate passed.
     """
     emb = table(spark, sf_dir, "embeddings")
-    mins, rngs = _sq8_stats(spark, sf_dir, emb)
+    mins, rngs = _sq8_stats(emb)
     w = np.floor(rngs * 1e6 / 255.0).astype(np.int64)
 
     def quantize(mat: np.ndarray) -> np.ndarray:
@@ -979,7 +949,7 @@ def knn_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     row answers is whether the two error sources compound or overlap).
     """
     emb = table(spark, sf_dir, "embeddings")
-    mins, rngs = _sq8_stats(spark, sf_dir, emb)
+    mins, rngs = _sq8_stats(emb)
     w = np.floor(rngs * 1e6 / 255.0).astype(np.int64)
 
     def quantize(mat: np.ndarray) -> np.ndarray:
@@ -1661,27 +1631,10 @@ def embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     within 1e-7 of an integer. The eigenvector SIGN is seed-determined
     (same recurrence → same sign), so no sign convention is needed.
     """
-    cov_rows = _cov_rows_shared(spark, sf_dir)
+    cov_rows = embedding_covariance(spark, sf_dir).collect()
     return spark.createDataFrame(
         _pca_rows_from_cov(cov_rows),
         schema="component int, dim int, loading_e6 bigint, evr_ppm bigint",
-    )
-
-
-def _cov_rows_shared(spark: SparkSession, sf_dir: str):
-    """embedding_covariance's collected O(dim²) row set — the one corpus
-    Gram pass behind embedding_pca, embedding_pca_project and the OPQ
-    rotation (r14: session memo kind "emb_cov"; the embedding_covariance
-    bench row itself times the scan, and the driver's gate always
-    recomputes — the collected integers are deterministic, so the memo
-    is bit-identical by construction)."""
-    from ._memo import memoized_rows
-
-    return memoized_rows(
-        spark,
-        sf_dir,
-        "emb_cov",
-        lambda: embedding_covariance(spark, sf_dir).collect(),
     )
 
 
@@ -1826,7 +1779,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from decimal import Decimal
 
-    cov_rows = _cov_rows_shared(spark, sf_dir)
+    cov_rows = embedding_covariance(spark, sf_dir).collect()
     loads: dict[int, dict[int, int]] = {}
     for comp, d, w, _evr in _pca_rows_from_cov(cov_rows):
         loads.setdefault(comp, {})[d] = w
@@ -2153,25 +2106,6 @@ def _pq_fit(
     return books, n
 
 
-def _pq_fit_shared(
-    spark: SparkSession, sf_dir: str, kind: str, emb: DataFrame
-) -> tuple[list[np.ndarray], int]:
-    """_pq_fit through the session memo (r14): the trained codebooks +
-    corpus n are a stored index artifact — knn_ivf_pq / knn_ivf_opq are
-    the builder rows (kinds "pq_fit_raw" / "pq_fit_opq"), their recall
-    rows the consumers. _pq_fit's driver fold is deterministic (partials
-    folded in sorted order), so a recomputation is bit-identical; with
-    the memo off (driver gate) every call trains from scratch."""
-    from ._memo import memoized_rows
-
-    def build():
-        books, n = _pq_fit(spark, emb)
-        return [int(n), [b.tolist() for b in books]]
-
-    n, books_l = memoized_rows(spark, sf_dir, kind, build)
-    return [np.array(b, dtype=np.float64) for b in books_l], int(n)
-
-
 def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ — the remaining FAISS tier (IndexIVFPQ, Jégou et al. 2011
     "Product Quantization for Nearest Neighbor Search"): coarse IVF
@@ -2208,9 +2142,7 @@ def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ml import _assign
 
     emb = table(spark, sf_dir, "embeddings")
-    books, n = _pq_fit_shared(
-        spark, sf_dir, "pq_fit_raw", emb.select("vec_id", "embedding")
-    )
+    books, n = _pq_fit(spark, emb.select("vec_id", "embedding"))
     sub = books[0].shape[1]
 
     step = max(1, n // IVF_CELLS)
@@ -2465,9 +2397,8 @@ def _opq_rotation(spark: SparkSession, sf_dir: str):
     denom — the n·4096·10⁶ normalizer that maps the exact-integer
     centered projection numerator back to original units). Shared by
     the fit-side frame builder and the search pass so the corpus pays
-    ONE covariance scan per caller (through the session memo when
-    active — see _cov_rows_shared)."""
-    cov_rows = _cov_rows_shared(spark, sf_dir)
+    ONE covariance scan per caller."""
+    cov_rows = embedding_covariance(spark, sf_dir).collect()
     loads: dict[int, dict[int, int]] = {}
     for comp, d, w, _evr in _pca_rows_from_cov(cov_rows):
         loads.setdefault(comp, {})[d] = w
@@ -2558,7 +2489,7 @@ def knn_ivf_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     loads, n_vecs, s, denom = _opq_rotation(spark, sf_dir)
     dim = max(max(d) for d in loads.values())
     rot = _opq_rotated_frame(spark, sf_dir, loads, n_vecs, s, denom)
-    books, n = _pq_fit_shared(spark, sf_dir, "pq_fit_opq", rot)
+    books, n = _pq_fit(spark, rot)
     rsub = books[0].shape[1]  # = PCA_COMPONENTS // PQ_M = 1
 
     # numpy twin of the rotated frame (same exact-integer recurrence)

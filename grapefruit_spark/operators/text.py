@@ -1102,24 +1102,10 @@ def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     BPE's greedy semantics, one codegen'd expression per iteration.
     The vocabulary is restricted to purely-alphabetic words (^[a-z]+$
     after lowercasing) so the marker can never collide with a symbol.
-
-    The learned merge table honors the session memo
-    (GRAPEFRUIT_CLUSTER_MEMO=1, the classifier-fit pattern): under it
-    the BPE_MERGES distributed training iterations run once per corpus
-    snapshot and the encode/report row reuses the ≤8-row table. Values
-    bit-identical either way.
     """
     return spark.createDataFrame(
         _bpe_merge_rows(spark, sf_dir),
         schema="merge_idx int, pair string, n_pair bigint",
-    )
-
-
-def _bpe_merge_rows(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, int]]:
-    from ._memo import memoized_rows
-
-    return memoized_rows(
-        spark, sf_dir, "bpe_merges", lambda: _bpe_merge_rows_build(spark, sf_dir)
     )
 
 
@@ -1202,7 +1188,7 @@ def _bpe_fused_rows(wf) -> list[tuple[int, str, int]]:
     return [(int(r["merge_idx"]), r["pair"], int(r["n_pair"])) for r in out]
 
 
-def _bpe_merge_rows_build(
+def _bpe_merge_rows(
     spark: SparkSession, sf_dir: str, fused_max_words: int = -1
 ) -> list[tuple[int, str, int]]:
     docs = table(spark, sf_dir, "documents")

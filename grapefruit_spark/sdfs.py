@@ -25,6 +25,13 @@ from .catalog import read_parquet, seed_schema
 _INTERNAL = ("__putting", "__merging", "__retired", "__compacting")
 
 
+def _is_partition_dir(parent: str, entry: str) -> bool:
+    """A hive ``col=value`` partition directory (Spark skips names that
+    start with ``_`` or ``.``, e.g. ``_temporary``)."""
+    return ("=" in entry and not entry.startswith(("_", "."))
+            and os.path.isdir(os.path.join(parent, entry)))
+
+
 class Sdfs:
     """Flat name → parquet-dataset namespace rooted at ``warehouse``."""
 
@@ -72,6 +79,20 @@ class Sdfs:
             shutil.rmtree(old)
         seed_schema(self.spark, final, self.spark.read.schema(data_schema).parquet(final).schema)
 
+    def _partition_cols(self, name: str) -> list[str]:
+        """Hive partition columns of a stored dataset, outermost first,
+        read from its ``col=value`` directory names (no Spark job). Every
+        partition directory nests the same columns, so one path down
+        names them all."""
+        cols: list[str] = []
+        d = self._path(name)
+        while True:
+            sub = next((e for e in sorted(os.listdir(d)) if _is_partition_dir(d, e)), None)
+            if sub is None:
+                return cols
+            cols.append(sub.split("=", 1)[0])
+            d = os.path.join(d, sub)
+
     # -- file ops (SdfsServer.java put/get/delete) ----------------------
     def put(self, df: DataFrame, name: str, mode: str = "overwrite",
             partition_by: list[str] | None = None) -> None:
@@ -108,15 +129,17 @@ class Sdfs:
 
     # -- namespace ops (ls / store / global) ----------------------------
     def ls(self, name: str) -> list[str]:
-        """Part-file locations of one dataset (reference ``ls`` shows
-        replica VMs; here: the distributed part files)."""
-        p = self._path(name)
-        if not os.path.isdir(p):
-            return []
-        return sorted(
-            os.path.join(p, f) for f in os.listdir(p)
-            if f.endswith(".parquet") or f.startswith("part-")
-        )
+        """Part-file locations of one dataset, inside its partition
+        directories too (reference ``ls`` shows replica VMs; here: the
+        distributed part files)."""
+        out: list[str] = []
+        for d, dirs, files in os.walk(self._path(name)):
+            dirs[:] = [e for e in dirs if _is_partition_dir(d, e)]
+            out += [
+                os.path.join(d, f) for f in files
+                if f.endswith(".parquet") or f.startswith("part-")
+            ]
+        return sorted(out)
 
     def store(self) -> list[str]:
         """All dataset names in this warehouse (reference ``store``)."""
@@ -139,11 +162,15 @@ class Sdfs:
         read; listings crawl): streaming sinks and incremental puts
         fragment datasets, compaction heals them. Round-robin
         repartition gives size-balanced output without a shuffle key.
-        Returns the new part-file count. (The reference's analogue is
-        re-replication healing in SdfsServer.java — same maintenance
+        A partitioned dataset keeps its partition columns; its rows are
+        placed by partition value, so each partition directory gets one
+        file. Returns the new part-file count. (The reference's analogue
+        is re-replication healing in SdfsServer.java — same maintenance
         slot, storage-layer concern.)
         """
-        self._rewrite(self.get(name).repartition(target_files), name, "__compacting")
+        cols = self._partition_cols(name)
+        self._rewrite(self.get(name).repartition(target_files, *cols), name,
+                      "__compacting", cols)
         return len(self.ls(name))
 
     def auto_compact(self, max_files: int = 16, target_files: int = 4) -> dict[str, int]:
@@ -176,11 +203,12 @@ class Sdfs:
         the same shape runs partition-wise (only partitions containing
         updated keys rewrite); here the dataset is one logical file, the
         reference's SDFS granularity (put replaces a whole file,
-        SdfsServer.java put/delete).
+        SdfsServer.java put/delete). A partitioned dataset keeps its
+        partition columns.
         """
         if not self.exists(name):
             self.put(updates, name)
             return
         survivors = self.get(name).join(updates.select(*key_cols), key_cols, "left_anti")
         merged = survivors.unionByName(updates)
-        self._rewrite(merged, name, "__merging")
+        self._rewrite(merged, name, "__merging", self._partition_cols(name))

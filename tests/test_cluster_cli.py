@@ -37,6 +37,23 @@ def test_cli_namespace_roundtrip(spark, tmp_path, capsys):
     assert cli.main(["--warehouse", wh, "delete", "t1"]) == 0
 
 
+def test_cli_put_goes_through_sdfs_put(spark, tmp_path):
+    """``cli put`` writes through ``Sdfs.put``, which seeds the schema
+    cache: the ``get`` that follows plans without a Spark job."""
+    from grapefruit_spark.sdfs import Sdfs
+
+    from .test_schema_cache import _jobs
+
+    src = tmp_path / "in.csv"
+    src.write_text("k,v\na,1\nb,2\n")
+    wh = str(tmp_path / "wh")
+    assert cli.main(["--warehouse", wh, "put", str(src), "t1", "--fmt", "csv"]) == 0
+    fs = Sdfs(spark, wh)
+    got, n_jobs = _jobs(spark, lambda: fs.get("t1"))
+    assert n_jobs == 0
+    assert sorted((r["k"], r["v"]) for r in got.collect()) == [("a", 1), ("b", 2)]
+
+
 def test_cli_info_json(spark, capsys):
     assert cli.main(["info"]) == 0
     out = json.loads(capsys.readouterr().out)

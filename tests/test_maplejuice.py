@@ -110,6 +110,32 @@ def test_sdfs_partitioned_put(spark, tmp_path):
     assert got.count() == 10
 
 
+def test_sdfs_rewrites_keep_hive_partitioning(spark, tmp_path):
+    """merge and compact rewrite a partitioned dataset partitioned: the
+    ``p=*`` directories survive, rows and values are unchanged, and
+    ls/global_ count the part files inside the partition directories."""
+    wh = tmp_path / "wh9"
+    fs = Sdfs(spark, str(wh))
+    schema = "k long, v double, p int"
+    base = spark.createDataFrame([(k, float(k), k % 3) for k in range(30)], schema)
+    fs.put(base.repartition(4), "t", partition_by=["p"])
+    updates = spark.createDataFrame([(1, 100.0, 1), (30, 30.0, 0)], schema)
+    fs.merge("t", updates, ["k"])
+    expected = {(k, float(k), k % 3) for k in range(31)} - {(1, 1.0, 1)} | {(1, 100.0, 1)}
+
+    def check() -> None:
+        assert sorted(e for e in os.listdir(wh / "t") if "=" in e) == ["p=0", "p=1", "p=2"]
+        assert {(r["k"], r["v"], r["p"]) for r in fs.get("t").collect()} == expected
+        parts = fs.ls("t")
+        assert parts and all(os.path.basename(os.path.dirname(f)).startswith("p=") for f in parts)
+        assert fs.global_() == {"t": len(parts)}
+
+    check()
+    assert fs.compact("t", 2) == 3  # one file per partition directory
+    check()
+    assert fs.get("t").columns == ["k", "v", "p"]
+
+
 def test_pipe_wordcount_matches_declarative(spark, tmp_path):
     """The reference's arbitrary-executable contract end-to-end: a real
     mapper/reducer pair of external python programs, hadoop-streaming

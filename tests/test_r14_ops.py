@@ -207,21 +207,6 @@ def test_threshold_curve_broadcasts_the_4row_side(spark):
     assert "BuildRight, Inner" in bnlj[0], bnlj[0]
 
 
-def test_band_curve_env_change_fails_loudly(spark):
-    """ADVICE_r13: GRAPEFRUIT_BAND_CURVE_SAMPLE is frozen at import (the
-    oracle embeds it); setting it afterwards must raise, not silently
-    sweep the frozen fraction."""
-    from grapefruit_spark.operators import dedup
-
-    assert os.environ.get("GRAPEFRUIT_BAND_CURVE_SAMPLE") is None
-    os.environ["GRAPEFRUIT_BAND_CURVE_SAMPLE"] = "0.5"
-    try:
-        with pytest.raises(RuntimeError, match="changed after import"):
-            dedup.minhash_band_curve(spark, "/root/testdata/sf0.001")
-    finally:
-        os.environ.pop("GRAPEFRUIT_BAND_CURVE_SAMPLE", None)
-
-
 def test_pca_project_full_range_emission(spark, tmp_path):
     """VERDICT_r13 #4: embedding_pca_project's former single-bigint
     numerator died at num ≈ 2.6e11·n (n ≳ 3·10⁷ unit vectors). The r14

@@ -43,11 +43,11 @@ def test_logit_fused_tier_matches_distributed(spark):
     driver corpus — the exact frame the hash gate checks."""
     from grapefruit_spark.operators.search import (
         LOGIT_FUSED_MAX_DOCS,
-        _logit_weight_rows_build,
+        _logit_weight_rows,
     )
 
-    fused = _logit_weight_rows_build(spark, SF_DIR)  # tier picks fused
-    dist = _logit_weight_rows_build(spark, SF_DIR, fused_max_docs=0)
+    fused = _logit_weight_rows(spark, SF_DIR)  # tier picks fused
+    dist = _logit_weight_rows(spark, SF_DIR, fused_max_docs=0)
     assert sorted(fused) == sorted(dist)
     assert len(fused) == 65
     # the driver corpus really is inside the fused tier
@@ -59,7 +59,7 @@ def test_logit_fused_tier_planted_branches(spark, tmp_path):
     """Planted corpus exercising σ saturation directions, negative
     weights (trunc-toward-zero vs floor division would diverge on them),
     and a gramless doc (bias-only code row): fused == distributed."""
-    from grapefruit_spark.operators.search import _logit_weight_rows_build
+    from grapefruit_spark.operators.search import _logit_weight_rows
 
     rows = (
         # strongly positive-label cluster (pushes some weights up)
@@ -74,8 +74,8 @@ def test_logit_fused_tier_planted_branches(spark, tmp_path):
         + [(901, None)]
     )
     d = _docs_dir(tmp_path, rows)
-    fused = _logit_weight_rows_build(spark, d)
-    dist = _logit_weight_rows_build(spark, d, fused_max_docs=0)
+    fused = _logit_weight_rows(spark, d)
+    dist = _logit_weight_rows(spark, d, fused_max_docs=0)
     assert sorted(fused) == sorted(dist)
     # the plant really produced both signs (otherwise the trunc-div
     # branch point was never exercised)
@@ -89,11 +89,11 @@ def test_bpe_fused_tier_matches_distributed(spark):
     loop merge for merge on the driver corpus."""
     from grapefruit_spark.operators.text import (
         BPE_FUSED_MAX_WORDS,
-        _bpe_merge_rows_build,
+        _bpe_merge_rows,
     )
 
-    fused = _bpe_merge_rows_build(spark, SF_DIR)
-    dist = _bpe_merge_rows_build(spark, SF_DIR, fused_max_words=0)
+    fused = _bpe_merge_rows(spark, SF_DIR)
+    dist = _bpe_merge_rows(spark, SF_DIR, fused_max_words=0)
     assert fused == dist
     assert len(fused) > 0
     assert BPE_FUSED_MAX_WORDS > 0  # tier actually on by default
@@ -104,7 +104,7 @@ def test_bpe_fused_tier_planted_chained_merges(spark, tmp_path):
     (multi-char symbols) and a tie exists — the incremental
     subtract/rewrite/add path and the pair-ASC tie-break must match the
     distributed recount exactly."""
-    from grapefruit_spark.operators.text import _bpe_merge_rows_build
+    from grapefruit_spark.operators.text import _bpe_merge_rows
 
     rows = (
         [(i, "abab ababab abababab") for i in range(30)]  # chained ab→abab
@@ -113,8 +113,8 @@ def test_bpe_fused_tier_planted_chained_merges(spark, tmp_path):
         + [(201, None), (202, "a")]                         # NULL / 1-char
     )
     d = _docs_dir(tmp_path, rows)
-    fused = _bpe_merge_rows_build(spark, d)
-    dist = _bpe_merge_rows_build(spark, d, fused_max_words=0)
+    fused = _bpe_merge_rows(spark, d)
+    dist = _bpe_merge_rows(spark, d, fused_max_words=0)
     assert fused == dist
     # the plant really chained: some merged pair contains a multi-char
     # symbol produced by an earlier merge

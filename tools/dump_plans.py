@@ -1,9 +1,7 @@
 """Dump .explain('formatted') for named queries to files.
 
 Usage: python tools/dump_plans.py <repo_root> <sf_dir> <out_dir> <suffix> name...
-Writes <out_dir>/<name>_<suffix>.txt for each query. Honors
-GRAPEFRUIT_CLUSTER_MEMO exactly as set (plans are the same either way
-for non-memo operators; memo only substitutes a pinned scan).
+Writes <out_dir>/<name>_<suffix>.txt for each query.
 """
 from __future__ import annotations
 

@@ -5,11 +5,6 @@ seconds instead of re-running the full 197-row HEADLINE.
 
 Usage: python tools/quick_time.py [sf_dir] name [name ...]
 
-Env: GRAPEFRUIT_CLUSTER_MEMO and GRAPEFRUIT_MEMO_SKIP are honored
-exactly as set (bench.py's builder rows skip only the kinds they
-build; here you control both explicitly — GRAPEFRUIT_CLUSTER_MEMO=0
-times a fully from-scratch build, GRAPEFRUIT_MEMO_SKIP=<kinds> mirrors
-a builder row's timed runs).
 Numbers here are NOT bench-record comparable run-to-run across hosts
 (no calibration), but before/after on the same quiet host is exactly
 the bench delta.
@@ -66,19 +61,10 @@ def main() -> int:
             print(f"{name:34s} ERROR {type(e).__name__}: {e}")
         finally:
             spark.catalog.clearCache()
-            # spare the session-memo frames exactly like bench.py's
-            # per-query sweep: their lineage is localCheckpoint-truncated,
-            # so dropping their blocks kills later consumers instead of
-            # slowing them (surfaced by a multi-query memo-on probe run)
-            keep: set[int] = set()
-            if os.environ.get("GRAPEFRUIT_CLUSTER_MEMO") == "1":
-                from grapefruit_spark.operators.graph import cluster_memo_rdd_ids
-
-                keep = cluster_memo_rdd_ids(spark)
+            # release pinned blocks exactly like bench.py's per-query sweep
             jsc = spark.sparkContext._jsc
             for rid in list(jsc.getPersistentRDDs().keySet().toArray()):
-                if rid not in keep:
-                    jsc.sc().unpersistRDD(rid, False)
+                jsc.sc().unpersistRDD(rid, False)
     return 0
 
 
