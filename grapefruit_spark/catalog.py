@@ -104,7 +104,15 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     confs that change inference; a hit reads with that schema, which plans
     a new relation (fresh attribute ids, per-query pruning) without a job.
     Data and DataFrames are never cached. Non-local paths (``os.stat``
-    fails) and misses take the plain read."""
+    fails) and misses take the plain read.
+
+    Limit: a directory dataset's identity is its top-level directory's.
+    Spark and ``Sdfs`` writes always change that directory, but for other
+    paths a file that another writer drops into an EXISTING partition
+    subdirectory (``dir/col=v/part-*.parquet``) leaves it unchanged: the
+    file's rows are still listed and read, but under the cached schema, so
+    a column only that file adds is not seen until the top-level
+    directory changes."""
     found = _identity(spark, path)
     if found is None:
         return spark.read.parquet(path)

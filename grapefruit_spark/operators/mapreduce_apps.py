@@ -12,6 +12,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..catalog import spread, table
 from ..maplejuice import juice, maple
@@ -171,11 +172,12 @@ def _ballots(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pre-partitioned on l_orderkey: HashPartitioning(l_orderkey) satisfies
     the clustered distribution of BOTH this (l_orderkey, l_suppkey)
-    groupBy (subset rule) and the downstream pairwise self-join on
-    l_orderkey, so the ballot build and the matchup join ride ONE
-    exchange (ReusedExchange serves both join sides) instead of shuffling
-    the ballot relation a second time — stage 1 at the reference's 100 MB
-    baseline scale: 9.9 → 4.0 s."""
+    groupBy (subset rule) and the pairwise sort-merge self-join on
+    l_orderkey in :func:`condorcet_pairs`, so the ballot relation is
+    shuffled exactly once: one ``Exchange hashpartitioning(l_orderkey)``
+    feeds the aggregate, and the second join side reads it back as a
+    ``ReusedExchange`` — stage 1 at the reference's 100 MB baseline
+    scale: 9.9 → 4.0 s."""
     li = table(spark, sf_dir, "lineitem")
     return (
         li.repartition("l_orderkey")
@@ -197,11 +199,16 @@ def condorcet_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Self-join of the ballot relation on orderkey gives every ordered pair
     exactly once (rk_a < rk_b); a single groupBy replaces the reference's
-    intermediate-file shuffle.
+    intermediate-file shuffle. The join is hinted to a sort-merge join so
+    both sides read the one l_orderkey exchange :func:`_ballots` builds.
+    Unhinted, a ballot relation under the broadcast threshold plans as a
+    broadcast join, one more Spark job per call; above it Spark picks this
+    same sort-merge join on its own, so the hint costs nothing at scale
+    (a shuffled-hash join would instead hold a hash table per partition).
     """
     b = _ballots(spark, sf_dir)
     a = b.alias("a")
-    c = b.alias("c")
+    c = b.alias("c").hint("merge")
     pairs = (
         a.join(c, (F.col("a.l_orderkey") == F.col("c.l_orderkey"))
                & (F.col("a.rk") < F.col("c.rk")))
@@ -253,32 +260,28 @@ def condorcet_winner(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalizes to wins == n_candidates - 1. Emits per-candidate win
     counts + the is_condorcet flag (SQL-expressible, unlike the
     reference's free-text verdict line).
-    """
-    from ..reliability import pin
 
-    # pin the pair matrix: it is C(candidates, 2) rows — tiny — but its
-    # SUBTREE is the full ballots shuffle, and the three consumers below
-    # (cands, wins, n_cand) would otherwise each recompute it (measured
-    # ~2× the stage-1 time at the 100 MB baseline scale without this).
-    pairs = pin(condorcet_pairs(spark, sf_dir))
-    cands = pairs.select(F.col("cand_lo").alias("cand")).union(
-        pairs.select(F.col("cand_hi").alias("cand"))
-    ).distinct()
-    # candidate count stays IN the plan (1-row agg broadcast): no driver
-    # action
-    n1 = cands.agg(F.count(F.lit(1)).alias("n_cand"))
-    wins = pairs.groupBy(F.col("pair_winner").alias("cand")).agg(
-        F.count(F.lit(1)).alias("wins")
+    The pair matrix has ONE consumer, so its subtree (the ballots
+    shuffle and self-join) runs once without being pinned: each pair
+    becomes a (cand, won) row for both of its candidates (won = 1 for the
+    pair's winner, 0 for the loser), and one groupBy(cand) yields every
+    candidate that appears in a pair with its wins, zeros included.
+    n_candidates is a window count over that one-row-per-candidate
+    result (≤ C(n, 2) pairs in, n rows out), the only single-partition
+    step of the plan.
+    """
+    pairs = condorcet_pairs(spark, sf_dir)
+    wins = (
+        pairs.select(F.inline(F.array(*(
+            F.struct(F.col(side).alias("cand"),
+                     (F.col("pair_winner") == F.col(side)).cast("int").alias("won"))
+            for side in ("cand_lo", "cand_hi")
+        ))))
+        .groupBy("cand")
+        .agg(F.sum("won").alias("wins"))
     )
-    return (
-        cands.join(wins, "cand", "left")
-        .join(F.broadcast(n1))
-        .select(
-            "cand",
-            F.coalesce("wins", F.lit(0)).alias("wins"),
-            (F.coalesce("wins", F.lit(0)) == F.col("n_cand") - 1).alias("is_condorcet"),
-        )
-    )
+    n_cand = F.count(F.lit(1)).over(Window.partitionBy())
+    return wins.select("cand", "wins", (F.col("wins") == n_cand - 1).alias("is_condorcet"))
 
 
 ORACLE["condorcet_winner"] = f"""

@@ -49,19 +49,18 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     plan is a flat scan of the materialized blocks, so iterative loops
     stay O(1) plan size per round.
 
-    The returned frame carries the id of the storage it pinned (local
-    mode) so :func:`unpin` can release it the moment a later iteration
-    supersedes it — without that, a 10-round loop holds 10 generations
-    of state in block storage simultaneously.
+    In local mode the returned frame carries the id of the RDD it pinned,
+    read from its own plan (the ``LogicalRDD`` ``localCheckpoint`` builds),
+    so :func:`unpin` can release it the moment a later iteration
+    supersedes it — without that, a 10-round loop holds 10 generations of
+    state in block storage simultaneously. The id never depends on what
+    other threads of the same SparkContext persist meanwhile, so clients
+    sharing one session each release only their own blocks.
     """
-    sc = df.sparkSession.sparkContext
     if reliable_dir(df) is not None:
         return df.checkpoint(eager=eager)
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     out = df.localCheckpoint(eager=eager)
-    new_ids = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - before
-    if new_ids:
-        out._pin_rdd_id = max(new_ids)
+    out._pin_rdd_id = out._jdf.queryExecution().logical().rdd().id()
     return out
 
 
@@ -69,9 +68,11 @@ def unpin(df: DataFrame) -> None:
     """Release the block storage held by a :func:`pin`'d frame.
 
     Call ONLY once nothing will read ``df`` again (e.g. the previous
-    iteration's state after the next one is eagerly materialized). No-op
-    for frames pin() didn't mark (reliable checkpoints clean up via
-    spark.cleaner.referenceTracking.cleanCheckpoints / sc.stop).
+    iteration's state after the next one is eagerly materialized). It
+    releases exactly the RDD ``pin`` recorded on ``df``, never another
+    thread's. No-op for frames pin() didn't mark (reliable checkpoints
+    clean up via spark.cleaner.referenceTracking.cleanCheckpoints /
+    sc.stop).
     """
     rid = getattr(df, "_pin_rdd_id", None)
     if rid is not None:

@@ -520,3 +520,40 @@ def test_band_curve_uses_miniband_masks(spark):
     assert "bit_or" in dedup._LAST_BAND_CURVE_PLAN, (
         dedup._LAST_BAND_CURVE_PLAN[:800]
     )
+
+
+def test_condorcet_winner_leaves_no_persistent_rdd(spark):
+    """Stage 2 reads the pair matrix once, so nothing is pinned: a call
+    adds no persistent RDD to the session."""
+    from grapefruit_spark.operators.mapreduce_apps import condorcet_winner
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    condorcet_winner(spark, SF_DIR).collect()
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) - before == set()
+
+
+def test_condorcet_winner_is_one_copartitioned_plan(spark):
+    """The ballots are shuffled once on l_orderkey and both sides of the
+    pairwise self-join read that exchange (the second as a
+    ReusedExchange); no side is broadcast; the only single-partition step
+    is the candidate-count window above the per-candidate aggregate."""
+    from grapefruit_spark.operators.mapreduce_apps import condorcet_winner
+    from grapefruit_spark.plans import executed_plan
+
+    df = condorcet_winner(spark, SF_DIR)
+    df.collect()  # execute so AQE finalizes the plan (ReusedExchange)
+    plan = executed_plan(df)
+    assert "isFinalPlan=true" in plan, plan[:300]
+    # node lines of the final plan, tree drawing stripped
+    nodes = [line.lstrip(" :|+-") for line in plan.split("== Initial Plan ==")[0].splitlines()]
+    text = "\n".join(nodes)
+    ballot_exchanges = [n for n in nodes if n.startswith("Exchange hashpartitioning(l_orderkey")]
+    assert len(ballot_exchanges) == 1, text
+    assert any(n.startswith("ReusedExchange") and "hashpartitioning(l_orderkey" in n
+               for n in nodes), text
+    assert "BroadcastExchange" not in text, text
+    single = [i for i, n in enumerate(nodes) if n.startswith("Exchange SinglePartition")]
+    assert len(single) == 1, text
+    below = nodes[single[0] + 1].lstrip("*()0123456789 ")
+    assert below.startswith("HashAggregate(keys=[cand#"), text
