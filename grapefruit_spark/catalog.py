@@ -120,7 +120,15 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     hit = _schemas.get(key)
     if hit is not None and hit[0] == ident:
         return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
+    try:
+        df = spark.read.parquet(path)
+    except Exception:
+        # a path replaced during inference: Spark listed the old file's
+        # length, then read the new file's footer. Infer again if so.
+        again = _identity(spark, path)
+        if again is None or again[1] == ident:
+            raise
+        return read_parquet(spark, path)
     # the identity taken BEFORE the read: if the file changes meanwhile,
     # the entry is stale on arrival and the next read re-infers
     _remember(key, ident, df.schema)

@@ -41,6 +41,23 @@ _BASE_CONFS: dict[str, str] = {
     # are reference-tracked and GC'd once their RDD is unreachable —
     # without this an iterative job leaks one checkpoint dir per round
     "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+    # Python workers (maple/juice pandas functions, every Arrow UDF) fork
+    # from grapefruit_spark.pyworker: pyspark.daemon without the per-task
+    # re-read of the zip directories of pyspark.zip and the spark-core jar,
+    # 54-80 ms of CPU per task on a 4-vCPU VM
+    "spark.python.daemon.module": "grapefruit_spark.pyworker",
+    # JVM <-> worker over a Unix socket: over loopback TCP each task also
+    # waited ~40 ms (the delayed-ACK minimum) for its first Arrow input.
+    # Executor run time per Python task on a 4-vCPU VM: stock 86 ms, this
+    # conf alone 78, the daemon alone 49, both 12
+    "spark.python.unix.domain.socket.enabled": "true",
+    # a fixed short deployment path, like the warehouse: an AF_UNIX path
+    # holds 107 bytes and the socket's own name takes 42; under Spark's
+    # default dir (java.io.tmpdir) a deep temp dir failed session start
+    "spark.python.unix.domain.socket.dir": "/tmp",
+    # workers import the daemon above and unpickle module-level functions
+    # (cli_wc_maple) by reference, from whatever directory the driver runs in
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 }
 
 
@@ -58,6 +75,9 @@ def apply_engine_confs(spark: SparkSession) -> SparkSession:
 
     The driver hands us its own SparkSession in ``__spark_entry__``; static
     confs (memory, master) are fixed by then, but SQL confs still apply.
+    The Python worker confs are static too: such a session keeps Spark's
+    stock daemon and TCP sockets, and its workers import this package
+    only if it is on their ``sys.path`` already.
     """
     for k, v in _BASE_CONFS.items():
         if k.startswith("spark.sql."):

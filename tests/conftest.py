@@ -1,11 +1,13 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests live in, not an installed or other copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from grapefruit_spark.session import get_spark  # noqa: E402
 

@@ -16,7 +16,6 @@ same Spark↔DuckDB gate the driver uses (the r9 module's pattern).
 
 from __future__ import annotations
 
-import sys
 
 import duckdb
 import pyarrow as pa
@@ -24,8 +23,6 @@ import pyarrow.parquet as pq
 import pytest
 
 from .util import assert_matches_oracle
-
-sys.path.insert(0, "/root/repo")
 
 
 def _duck_for(d: str, tables: list[str]):

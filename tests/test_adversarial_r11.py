@@ -10,15 +10,12 @@
 
 from __future__ import annotations
 
-import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from .util import assert_matches_oracle
-
-sys.path.insert(0, "/root/repo")
 
 
 def _duck_for(d: str, tables: list[str]):

@@ -20,15 +20,12 @@
 from __future__ import annotations
 
 import math
-import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from .util import assert_matches_oracle
-
-sys.path.insert(0, "/root/repo")
 
 
 def _duck_for(d: str, tables: list[str]):

@@ -25,10 +25,6 @@ import pytest
 
 from .util import assert_matches_oracle
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def _duck_for(d: str, tables: list[str]):
     con = duckdb.connect()

@@ -18,7 +18,6 @@ runs through the same Spark↔DuckDB gate the driver uses.
 
 from __future__ import annotations
 
-import sys
 
 import duckdb
 import pyarrow as pa
@@ -26,8 +25,6 @@ import pyarrow.parquet as pq
 import pytest
 
 from .util import assert_matches_oracle
-
-sys.path.insert(0, "/root/repo")
 
 
 def _duck_for(d: str, tables: list[str]):

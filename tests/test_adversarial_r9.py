@@ -13,7 +13,6 @@ Spark↔DuckDB gate the driver uses.
 
 from __future__ import annotations
 
-import sys
 
 import duckdb
 import pyarrow as pa
@@ -21,8 +20,6 @@ import pyarrow.parquet as pq
 import pytest
 
 from .util import assert_matches_oracle
-
-sys.path.insert(0, "/root/repo")
 
 
 def _duck_for(d: str, tables: list[str]):

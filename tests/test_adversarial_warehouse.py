@@ -230,9 +230,6 @@ def adv_duck(adv_dir):
 
 
 def _target_queries():
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
 
     oracles = entrymod.oracle_sql()

@@ -15,6 +15,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrameReader
 from pyspark.sql import functions as F
 
 from grapefruit_spark import catalog
@@ -194,6 +195,34 @@ def test_concurrent_reads_and_rewrites(spark, tmp_path):
     for p in paths:
         assert read_parquet(spark, p).columns == ["id", "extra"]
         assert len([k for k in catalog._schemas if k[1] == p]) == 1
+
+
+def test_path_replaced_during_inference_is_inferred_again(spark, tmp_path, monkeypatch):
+    """The race behind the concurrent test's flakes, made deterministic: the
+    first inference fails because the file was replaced under it."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": [1, 2]}), path)
+    stock = DataFrameReader.parquet
+    calls = []
+
+    def replaced_then_fails(self, *paths, **options):
+        calls.append(paths)
+        if len(calls) == 1:
+            pq.write_table(pa.table({"id": [1, 2], "extra": [3, 4]}), path + ".tmp")
+            os.replace(path + ".tmp", path)
+            raise RuntimeError("is not a Parquet file. Expected magic number at tail")
+        return stock(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", replaced_then_fails)
+    assert read_parquet(spark, path).columns == ["id", "extra"]
+    assert len(calls) == 2
+
+
+def test_inference_error_on_an_unchanged_path_is_raised(spark, tmp_path):
+    path = tmp_path / "t.parquet"
+    path.write_bytes(b"not parquet at all")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        read_parquet(spark, str(path))
 
 
 def _assert_seeded(spark, fs, name):

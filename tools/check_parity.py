@@ -21,7 +21,7 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def value_hash(rows: list[tuple], cols: list[str]) -> str:
