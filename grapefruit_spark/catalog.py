@@ -155,10 +155,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, path)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql queries."""
     for name in TABLES:

@@ -108,28 +108,6 @@ def md5_hash60_sql(expr: str, salt: str = "") -> str:
 MINHASH_P = (1 << 31) - 1
 
 
-def minhash_signature(grams: Column, num_perm: int, seed: int = 42) -> Column:
-    """MinHash signature (array<bigint>, len ``num_perm``) of a string-array.
-
-    Permutation params derive from xxhash64 of (seed, i) so the family is
-    deterministic across runs without shipping state. Stays JVM-side:
-    one base hash per gram, then min over a linear permutation per band.
-    Empty gram arrays yield a sentinel signature of all MINHASH_P.
-    """
-    base = F.transform(grams, lambda g: F.abs(F.xxhash64(g, F.lit(seed))) % F.lit(MINHASH_P))
-
-    def _perm_fn(a: int, b: int):
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-    sig = []
-    for i in range(num_perm):
-        # deterministic odd multiplier / offset per permutation
-        a = (hash_param(seed, 2 * i) | 1) % MINHASH_P
-        b = hash_param(seed, 2 * i + 1) % MINHASH_P
-        sig.append(F.coalesce(F.array_min(F.transform(base, _perm_fn(a, b))), F.lit(MINHASH_P)))
-    return F.array(*sig)
-
-
 def hash_param(seed: int, i: int) -> int:
     """Deterministic 61-bit pseudo-random parameter (python-side constant)."""
     x = (seed * 0x9E3779B97F4A7C15 + i * 0xBF58476D1CE4E5B9) & ((1 << 64) - 1)
@@ -224,10 +202,6 @@ def dec_sum(col: Column | str, scale: int = 2) -> Column:
     # widens the accumulator, not the per-row fast path. Values are
     # identical to the (38,6) cast — same nearest-6dp rounding per addend.
     return F.round(F.sum(c.cast("decimal(18,6)")), scale).cast("double")
-
-
-#: Oracle-side twin of :func:`dec_avg`.
-DEC_AVG_SQL = "round(sum(({expr})::DECIMAL(38,6))::DOUBLE / count({expr}), {scale})"
 
 
 def dec_avg(col: Column | str, scale: int = 4) -> Column:

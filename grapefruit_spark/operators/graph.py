@@ -952,12 +952,9 @@ def supplier_pagerank_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partition power-iteration loop — the tier that actually runs at
     100 TB — onto the driver graph, under the SAME unrolled-CTE oracle.
 
-    Standing evidence (r9, VERDICT_r8 order #4): once the fused numpy
-    kernel took over below 2M edges, the driver gate and the sf0.1 bench
-    exercised only the kernel; the distributed loop's proof lived in a
-    one-off sf1.0 tool run whose evidence ages. As a registry query it
-    is re-proven hash-green every rotation and its wall is tracked by
-    bench.py."""
+    The fused numpy kernel takes over below 2M edges, so on test-scale
+    data supplier_pagerank runs only the kernel. This is the only
+    registry query that forces the distributed PageRank tier."""
     ranks = pagerank(
         supplier_edges(spark, sf_dir),
         fused_max_edges=0,

@@ -11,10 +11,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def formatted_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().explainString("formatted")
-
-
 def pushed_filters(df: DataFrame) -> str:
     """The PushedFilters section(s) of the scan nodes."""
     plan = executed_plan(df)
@@ -47,10 +43,3 @@ def assert_no_python_row_udf(df: DataFrame) -> None:
     (explicit escape hatch), row-at-a-time Python UDFs are not."""
     plan = executed_plan(df)
     assert "BatchEvalPython" not in plan, "row-at-a-time Python UDF in plan"
-
-
-def whole_stage_codegen_ids(df: DataFrame) -> int:
-    """Number of whole-stage-codegen spans (bigger spans → fewer ids)."""
-    import re
-
-    return len(set(re.findall(r"\*\((\d+)\)", executed_plan(df))))

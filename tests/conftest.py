@@ -21,6 +21,7 @@ TABLE_NAMES = (
 def spark():
     spark = get_spark("grapefruit-tests", master="local[4]")
     yield spark
+    spark.stop()  # also removes the accumulator server's /tmp socket file
 
 
 @pytest.fixture(scope="session")

@@ -21,11 +21,13 @@ plan-only — no data is executed, so the full 100+-query sweep is cheap.
 
 from __future__ import annotations
 
+import sys
+
 import duckdb
 import pytest
 from pyspark.sql import types as T
 
-from grapefruit_spark.operators import all_oracles, all_queries
+from grapefruit_spark.operators import _modules, all_oracles, all_queries
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = (
@@ -86,21 +88,21 @@ def duck():
     con.close()
 
 
-def test_unproven_queries_fit_the_sample_window():
-    """Rotation contract: every query still needing driver proof
-    (_never_green) must land inside the first 50 registry entries — the
-    external checker samples a prefix, so an unproven query outside the
-    window can never earn its green row."""
-    from grapefruit_spark.operators import _never_green
+def test_a_registry_module_that_fails_to_import_is_an_error(monkeypatch):
+    """A broken module must fail the registry, not silently drop its
+    queries from all_queries() and every test that iterates it."""
+    monkeypatch.setitem(sys.modules, "grapefruit_spark.operators.scale", None)
+    with pytest.raises(ImportError):
+        all_queries()
 
-    names = list(all_queries())
-    assert len(names) == len(set(names)), "duplicate registry names"
-    unproven = _never_green()
-    outside = [n for n in unproven if n not in names[:50]]
-    assert not outside, (
-        f"{len(unproven)} unproven queries but these fall outside the "
-        f"50-entry sample window: {outside}"
-    )
+
+def test_every_module_query_is_registered_once():
+    """No name is defined by two modules (the second would silently
+    replace the first), and every oracle belongs to a registered query."""
+    queries = all_queries()
+    assert len(queries) == sum(len(mod.QUERIES) for mod in _modules())
+    for mod in _modules():
+        assert set(mod.ORACLE) <= set(queries), mod.__name__
 
 
 def test_no_hugeint_and_type_class_parity(spark, duck):
