@@ -25,6 +25,27 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def registry_frames(spark):
+    """Every registered query's DataFrame at sf0.001, built once for the
+    two whole-registry sweeps (``test_oracle_types`` and ``test_plans``).
+
+    Building is not plan-only: eager query functions run Spark jobs
+    before they return (see ``test_no_hugeint_and_type_class_parity``),
+    and leave ~13-14 MB in 32-37 persisted RDDs. The sweeps read only
+    schemas and plans, so those blocks are released here rather than
+    held for the rest of the session. Cached-data entries stay registered, so the
+    plans are unchanged; a later query that reads one recomputes it."""
+    from grapefruit_spark.operators import all_queries
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    frames = {name: fn(spark, SF_DIR) for name, fn in all_queries().items()}
+    for rdd_id in set(jsc.getPersistentRDDs().keySet()) - before:
+        jsc.sc().unpersistRDD(rdd_id, False)
+    return frames
+
+
+@pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()
     for t in TABLE_NAMES:

@@ -3,6 +3,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +16,7 @@ from grapefruit_spark.maplejuice import (
 )
 from grapefruit_spark.operators import mapreduce_apps
 from grapefruit_spark.sdfs import Sdfs
+from grapefruit_spark.session import apply_engine_confs
 
 from .conftest import SF_DIR
 from .util import assert_matches_oracle
@@ -330,3 +332,47 @@ def test_sdfs_hides_internal_dirs(spark, tmp_path):
             fs.get(bad)
         with pytest.raises(ValueError):
             fs.put(spark.range(1), bad)
+
+
+def _codecs(files: list[str]) -> set[str]:
+    """Every column chunk's compression codec across ``files``."""
+    codecs = set()
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            for col in range(md.num_columns):
+                codecs.add(md.row_group(rg).column(col).compression)
+    return codecs
+
+
+def test_sdfs_writes_zstd(spark, tmp_path):
+    """put, merge and compact each write every column chunk with zstd."""
+    fs = Sdfs(spark, str(tmp_path / "wh10"))
+    schema = "k long, tag string, v double"
+    rows = [(k, f"t{k % 7}", k / 3) for k in range(200)]
+    fs.put(spark.createDataFrame(rows, schema).repartition(6), "t")
+    assert _codecs(fs.ls("t")) == {"ZSTD"}
+    fs.merge("t", spark.createDataFrame([(1, "u", 0.5), (500, "n", 1.5)], schema), ["k"])
+    assert _codecs(fs.ls("t")) == {"ZSTD"}
+    assert fs.compact("t", 2) == 2
+    assert _codecs(fs.ls("t")) == {"ZSTD"}
+    assert fs.get("t").count() == 201
+
+
+def test_handed_in_session_gets_the_codec(spark, tmp_path):
+    """A session built elsewhere (the ``__spark_entry__`` contract) writes
+    zstd once ``apply_engine_confs`` has run on it."""
+    key = "spark.sql.parquet.compression.codec"
+    old = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "snappy")
+        apply_engine_confs(spark)
+        out = str(tmp_path / "handed_in")
+        spark.range(100).withColumn("s", F.col("id").cast("string")).write.parquet(out)
+        files = [os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet")]
+        assert files and _codecs(files) == {"ZSTD"}
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)

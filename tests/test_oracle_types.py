@@ -15,8 +15,17 @@ result column:
   2. the DuckDB type CLASS (int/float/decimal/bool/str/ts/date/...)
      matches the Spark query's schema class for the same column.
 
-DuckDB binding (`rel.types`) and Spark analysis (`df.schema`) are both
-plan-only — no data is executed, so the full 100+-query sweep is cheap.
+DuckDB binding (`rel.types`) executes no data, and reading `df.schema`
+launches no Spark job. Building the Spark frames does: 83 of the 216
+builds launch jobs, in the eager query functions (streaming sims, pins,
+iterative fits) and in the first read of each table (schema inference).
+At sf0.001 in a local[4] session on a 4-vCPU VM, building all 216 took
+141-156 s, 130-143 s of it in those 83, which ran 721 jobs (streaming
+micro-batches not counted). The slowest: stream_attribution_outer_sim
+~12 s, stream_ttl_sim ~9 s, stream_attribution_sim ~8 s,
+jaccard_clusters and ingest_pipeline_sim ~7 s. The frames come from the
+session fixture ``registry_frames``, built once and shared with
+``test_plans.test_no_row_udfs_anywhere``.
 """
 
 from __future__ import annotations
@@ -105,10 +114,9 @@ def test_every_module_query_is_registered_once():
         assert set(mod.ORACLE) <= set(queries), mod.__name__
 
 
-def test_no_hugeint_and_type_class_parity(spark, duck):
+def test_no_hugeint_and_type_class_parity(registry_frames, duck):
     """One sweep over every oracle: would have caught every red driver
     row the project has ever had (all were HUGEINT emissions)."""
-    queries = all_queries()
     problems: list[str] = []
     for name, sql in sorted(all_oracles().items()):
         rel = duck.sql(sql)  # binding only — no execution
@@ -116,7 +124,7 @@ def test_no_hugeint_and_type_class_parity(spark, duck):
         for col, cls in dtypes.items():
             if cls == "HUGEINT":
                 problems.append(f"{name}.{col}: oracle emits HUGEINT (cast to BIGINT)")
-        sdf = queries[name](spark, SF_DIR)  # analysis only — no job
+        sdf = registry_frames[name]
         stypes = {f.name: _spark_class(f.dataType) for f in sdf.schema.fields}
         if set(dtypes) != set(stypes):
             problems.append(

@@ -48,10 +48,10 @@ def test_grep_pushes_lang_filter(spark):
     assert_filter_pushed(df, "lang")
 
 
-def test_no_row_udfs_anywhere(spark):
+def test_no_row_udfs_anywhere(registry_frames):
     """Every registered query plans without row-at-a-time Python UDFs."""
-    for name, fn in all_queries().items():
-        assert_no_python_row_udf(fn(spark, SF_DIR))
+    for df in registry_frames.values():
+        assert_no_python_row_udf(df)
 
 
 def test_knn_bruteforce_broadcasts_queries(spark):
