@@ -155,12 +155,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, path)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql queries."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def spread(df: DataFrame) -> DataFrame:
     """Fan a scan out to every core WITHOUT ever shuffling a corpus that
     is already well-partitioned (r14 optimization; generalized from

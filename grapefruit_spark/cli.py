@@ -19,6 +19,7 @@ import importlib
 import json
 import sys
 
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
@@ -78,7 +79,10 @@ def _load_exe(spec: str):
     return getattr(importlib.import_module(mod), fn or "run")
 
 
-def main(argv: list[str] | None = None) -> int:
+def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:
+    """Run one CLI command, in ``spark`` if given. ``get_spark`` would
+    re-apply its builder options (the app name among them) to a session
+    that is already running, so a caller that shares its session passes it."""
     args = build_parser().parse_args(argv)
     from .cluster import info, members
     from .maplejuice import juice, maple
@@ -86,7 +90,7 @@ def main(argv: list[str] | None = None) -> int:
     from .session import get_spark
     from .sources import read_any
 
-    spark = get_spark("grapefruit-cli")
+    spark = spark or get_spark("grapefruit-cli")
     fs = Sdfs(spark, args.warehouse)
 
     if args.cmd == "put":

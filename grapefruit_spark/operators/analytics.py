@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import register_views, table
+from ..catalog import table
 from ..functions import DEC_SUM_SQL
 
 ORACLE: dict[str, str] = {}
@@ -178,25 +178,30 @@ WHERE c_mktsegment = 'MACHINERY' AND c_acctbal > 8000
 
 # ------------------------------------------------------------------ B19
 def sql_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The raw SQL surface: register the catalog as views and run ANSI SQL
-    through spark.sql — proves a reference user can bring plain SQL."""
-    register_views(spark, sf_dir)
-    # r14: catalog.spread on the lineitem view measured ~neutral here
-    # (the count(DISTINCT) expand re-shuffles regardless) — the raw-SQL
-    # surface stays exactly the registered catalog views
+    """The raw SQL surface: run ANSI SQL through spark.sql over the
+    catalog's tables — proves a reference user can bring plain SQL.
+
+    The tables are DataFrame arguments (``{lineitem}`` placeholders), not
+    session temp views: PySpark binds each under a unique name and drops
+    it after analysis, so concurrent calls for different ``sf_dir`` never
+    read each other's tables."""
+    # r14: catalog.spread on lineitem measured ~neutral here (the
+    # count(DISTINCT) expand re-shuffles regardless) — the raw-SQL
+    # surface reads exactly the catalog tables
     return spark.sql(
         """
         SELECT n_name,
                CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
                                    AS DECIMAL(38,6))), 2) AS DOUBLE) AS revenue,
                count(DISTINCT o_orderkey)                        AS n_orders
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
+        FROM {lineitem}
+        JOIN {orders} ON l_orderkey = o_orderkey
+        JOIN {customer} ON o_custkey = c_custkey
+        JOIN {nation} ON c_nationkey = n_nationkey
         WHERE l_returnflag = 'N'
         GROUP BY n_name
-        """
+        """,
+        **{t: table(spark, sf_dir, t) for t in ("lineitem", "orders", "customer", "nation")},
     )
 
 

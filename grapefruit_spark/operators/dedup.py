@@ -478,15 +478,13 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # the signature pipeline is consumed three times (bands, sig_a,
     # sig_b) and its lambda expressions defeat ReuseExchange
-    # canonicalization — persist so it computes once. Signatures are
-    # compact (64 longs/doc, ~0.5 KB) and MEMORY_AND_DISK spills rather
-    # than OOMs at corpus scale; LRU eviction reclaims it afterwards.
-    from pyspark.storagelevel import StorageLevel
+    # canonicalization — pin so it computes once (one job, here).
+    # Signatures are compact (64 longs/doc, ~0.5 KB) and the pin spills
+    # rather than OOMs at corpus scale. The returned frame reads the pin,
+    # so it is not unpinned here.
+    from ..reliability import pin
 
-    sigs = minhash_signatures(table(spark, sf_dir, "documents")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sigs.count()  # materialize before fan-out
+    sigs = pin(minhash_signatures(table(spark, sf_dir, "documents")))
     banded = sigs.select(
         "doc_id", F.explode(band_keys(F.col("sig"), LSH_BANDS, LSH_ROWS)).alias("bk")
     )
@@ -626,16 +624,14 @@ def minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     EAGER NOTE: this builder materializes the gram and signature frames
     at plan-construction time (two Spark jobs fire before the caller
     acts) — same eagerness as graph.py pagerank()/personalized_pagerank.
-    localCheckpoint (not persist) bounds the storage lifetime: the
-    checkpointed blocks are reclaimed by the ContextCleaner once the
-    returned DataFrame is dropped, so a long-lived session sweeping many
-    queries doesn't retain the O(corpus) gram arrays forever (r10,
-    ADVICE_r9).
+    Both are ``reliability.pin``s, which the returned DataFrame reads,
+    so neither is unpinned here.
     """
-    gh = minhash_grams(table(spark, sf_dir, "documents")).localCheckpoint(
-        eager=True  # grams feed signatures AND the exact verify
-    )
-    sigs = _sigs_from_gram_arrays(gh).localCheckpoint(eager=True)
+    from ..reliability import pin
+
+    # grams feed signatures AND the exact verify
+    gh = pin(minhash_grams(table(spark, sf_dir, "documents")))
+    sigs = pin(_sigs_from_gram_arrays(gh))
     banded = sigs.select(
         "doc_id", F.explode(band_keys(F.col("sig"), LSH_BANDS, LSH_ROWS)).alias("bk")
     )
@@ -1710,12 +1706,9 @@ def minhash_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale would silently inflate it. Raw r=2 slices are ~2×20 digits,
     barely wider than the hash they replace.
     """
-    from pyspark.storagelevel import StorageLevel
+    from ..reliability import pin, unpin
 
-    sigs = minhash_signatures(table(spark, sf_dir, "documents")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sigs.count()
+    sigs = pin(minhash_signatures(table(spark, sf_dir, "documents")))
     sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     est = F.round(
@@ -1795,15 +1788,15 @@ def minhash_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     # EAGER (disclosed): the agg frame is ONE row — materialize it so the
-    # 64-perm signature cache can be released immediately instead of
-    # living for the whole session (ml.py's emb.unpersist pattern). The
+    # 64-perm signature pin can be released immediately instead of
+    # waiting for the ContextCleaner (kmeans_fit's unpin pattern). The
     # executed mask-join plan is kept on the module hook for the plan
     # canary (tests/test_plans.py), since the returned frame is rebuilt
     # from the collected row.
     global _LAST_BAND_CURVE_PLAN
     _LAST_BAND_CURVE_PLAN = aggs._jdf.queryExecution().executedPlan().toString()
     agg_row = aggs.collect()[0]
-    sigs.unpersist()
+    unpin(sigs)
     aggs = spark.createDataFrame([agg_row], schema=aggs.schema)
     rows = [
         f"named_struct('bands', {b}, 'rows_per_band', {r},"

@@ -24,20 +24,21 @@ ORACLE: dict[str, str] = {}
 def write_partition_overwrite_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition overwrite round trip: stage orders
     hive-partitioned by o_orderpriority, then OVERWRITE only the
-    1-URGENT partition with doubled totalprice under
-    ``partitionOverwriteMode=dynamic`` (per-write option — no session
-    conf mutation). The read-back per-partition profile hashes against
-    an oracle holding doubled prices for exactly that slice — proof the
-    dynamic overwrite replaced the one partition present in the
-    incoming frame and left every other partition byte-identical (a
-    STATIC overwrite would have deleted them; a botched append would
-    double-count).
+    1-URGENT partition with doubled totalprice through
+    ``sources.io.write_any(..., dynamic_overwrite=True)`` (a per-write
+    option — no session conf mutation). The read-back per-partition
+    profile hashes against an oracle holding doubled prices for exactly
+    that slice — proof the dynamic overwrite replaced the one partition
+    present in the incoming frame and left every other partition
+    byte-identical (a STATIC overwrite would have deleted them; a botched
+    append would double-count).
 
     At 100 TB this is the nightly-restatement shape: rewrite one day /
     one priority class in place without touching sibling partitions.
     """
     import os
 
+    from ..sources.io import write_any
     from ..streaming.events import scratch_dir
 
     base = os.path.join(scratch_dir("gf_dynovr_sim_"), "orders_by_prio")
@@ -46,16 +47,11 @@ def write_partition_overwrite_sim(spark: SparkSession, sf_dir: str) -> DataFrame
         .where(F.col("o_orderkey").isNotNull())
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
     )
-    orders.write.partitionBy("o_orderpriority").mode("overwrite").parquet(base)
+    write_any(orders, base, partition_by=["o_orderpriority"])
     restated = orders.where(F.col("o_orderpriority") == "1-URGENT").withColumn(
         "o_totalprice", F.col("o_totalprice") * 2  # ×2 is exact in binary fp
     )
-    (
-        restated.write.partitionBy("o_orderpriority")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(base)
-    )
+    write_any(restated, base, partition_by=["o_orderpriority"], dynamic_overwrite=True)
     back = read_parquet(spark, base)
     return (
         back.groupBy("o_orderpriority")

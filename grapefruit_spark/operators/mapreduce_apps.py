@@ -408,7 +408,7 @@ def cli_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     def run(argv: list[str]) -> str:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            rc = cli_main(argv)
+            rc = cli_main(argv, spark)
         if rc != 0:
             raise RuntimeError(f"cli {argv[0]!r} exited {rc}")
         return buf.getvalue()

@@ -54,14 +54,15 @@ def kmeans_fit(
     ``emb`` must have (vec_id, embedding). Init = step-sampled rows by
     vec_id (deterministic, spread across the id range).
 
-    The projected corpus is persisted (memory, spilling to disk) for the
-    duration of the loop — one storage write instead of ``iters + 2``
-    full input scans (count, init, one per iteration), the standard
-    iterative-training layout — and released before returning.
+    The projected corpus is pinned (``reliability.pin``: memory, spilling
+    to disk) for the duration of the loop — one storage write instead of
+    ``iters + 2`` full input scans (count, init, one per iteration), the
+    standard iterative-training layout — and released before returning.
+    The pin is lazy: the count that sizes the init step materializes it.
     """
-    from pyspark import StorageLevel
+    from ..reliability import pin, unpin
 
-    emb = emb.persist(StorageLevel.MEMORY_AND_DISK)
+    emb = pin(emb, eager=False)
     n = emb.count()
     step = max(1, n // k)
     init = (
@@ -114,7 +115,7 @@ def kmeans_fit(
         cents[nonzero] = sums[nonzero] / counts[nonzero, None]
         history.append(inertia)
         bc.destroy()
-    emb.unpersist(blocking=False)
+    unpin(emb)
     return cents, history
 
 

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..reliability import pin
 from .dedup import ORACLE as DEDUP_ORACLE  # noqa: F401  (kept adjacent for reference)
 from .text import doc_quality, lang_id
 
@@ -112,9 +113,9 @@ def ingest_dedup(fs, fp_table: str, new_docs: DataFrame) -> DataFrame:
         seen = fs.get(fp_table).select("fp")
         batch_keep = batch_keep.join(seen, "fp", "left_anti")
     admitted_ids = batch_keep.select("doc_id", "fp")
-    # persist through the two consumers (merge write + returned join):
-    # the anti-join against the stored set must not recompute per action
-    admitted_ids = admitted_ids.localCheckpoint(eager=True)
+    # pin through the two consumers (merge write + returned join): the
+    # anti-join against the stored set must not recompute per action
+    admitted_ids = pin(admitted_ids)
     fs.merge(fp_table, admitted_ids.select("fp", "doc_id"), ["fp"])
     return new_docs.join(admitted_ids.select("doc_id"), "doc_id", "left_semi")
 
@@ -138,7 +139,7 @@ def ingest_neardup(fs, state: str, new_docs: DataFrame, tau: float | None = None
     tau = MINHASH_TAU if tau is None else tau
     from ..functions import band_keys
 
-    sigs_new = minhash_signatures(new_docs).localCheckpoint(eager=True)
+    sigs_new = pin(minhash_signatures(new_docs))
     bands_new = sigs_new.select(
         "doc_id", F.explode(band_keys(F.col("sig"), LSH_BANDS, LSH_ROWS)).alias("bk")
     )
@@ -186,7 +187,7 @@ def ingest_neardup(fs, state: str, new_docs: DataFrame, tau: float | None = None
     rej_batch = _rejections(cand_batch, batch_sigs)
     rejected = rej_batch if rejected is None else rejected.unionByName(rej_batch).distinct()
 
-    admitted_sigs = sigs_new.join(rejected, "doc_id", "left_anti").localCheckpoint(eager=True)
+    admitted_sigs = pin(sigs_new.join(rejected, "doc_id", "left_anti"))
     fs.merge(f"{state}_sigs", admitted_sigs, ["doc_id"])
     fs.merge(
         f"{state}_bands",
@@ -217,7 +218,6 @@ def ingest_span_dedup(fs, state: str, new_docs: DataFrame) -> DataFrame:
     Returns (doc_id, n_tokens, n_removed, clean_text).
     """
     from ..functions import normalize_text, word_ngrams, ws_tokens
-    from ..reliability import pin
     from .dedup import SPAN_W
 
     arr = pin(
@@ -264,12 +264,14 @@ def ingest_span_dedup(fs, state: str, new_docs: DataFrame) -> DataFrame:
             F.col("ss"), lambda s: (s <= i) & (i <= s + F.lit(SPAN_W - 1))
         ),
     )
-    out = joined.select(
-        "doc_id",
-        F.size("toks").alias("n_tokens"),
-        (F.size("toks") - F.size(clean)).alias("n_removed"),
-        F.array_join(clean, " ").alias("clean_text"),
-    ).localCheckpoint(eager=True)
+    out = pin(
+        joined.select(
+            "doc_id",
+            F.size("toks").alias("n_tokens"),
+            (F.size("toks") - F.size(clean)).alias("n_removed"),
+            F.array_join(clean, " ").alias("clean_text"),
+        )
+    )
     # extend durable state with THIS batch's distinct spans (post-arrival
     # occurrences of them are duplicates by definition)
     fs.merge(state, pos_fp.select("fp").distinct(), ["fp"])

@@ -77,7 +77,7 @@ def bucketed_join(
 # ------------------------------------------------------------------ A13
 def scale_skew_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible A13 round trip: per-supplier revenue via
-    ``salted_agg`` (two-phase, skew-immune), both sides persisted with
+    ``salted_agg`` (two-phase, skew-immune), both sides written with
     ``write_bucketed`` on the join key, re-joined with ``bucketed_join``
     (zero exchange — pinned in test_scale.py), rolled up per nation.
 

@@ -1482,6 +1482,8 @@ LOGIT_FUSED_MAX_DOCS = 8_000
 LOGIT_P_SCALE = 10**12
 #: z normalizer: codes are on the 1024 grid, weights on the 10¹² grid
 LOGIT_Z_DEN = QC_SCALE * LOGIT_P_SCALE
+# the fused tier's int64 gradient sums stay exact only inside this bound
+assert QC_SCALE * LOGIT_P_SCALE * LOGIT_FUSED_MAX_DOCS < 2**63
 
 
 def _trunc_div(a: int, b: int) -> int:
@@ -1521,7 +1523,7 @@ def quality_classifier_logit(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 65-slot code ARRAY (the feature space is a fixed 64-bucket hash
     grid + bias, so the dense row is 65 longs ≈ 0.5 KB/doc — narrower
     than the 65 sparse rows + replicated y it replaces); the
-    localCheckpoint both materializes it and TRUNCATES its lineage, so
+    pin both materializes it and TRUNCATES its lineage, so
     each iteration's plan is a few nodes over an RDD scan instead of
     the full tokenize/gopher tree re-analyzed 16× (guide §3.3/§5 —
     measured ~1.4 s/step of pure driver analysis without it). Every
@@ -1612,6 +1614,7 @@ def _logit_weight_rows(
     sf_dir: str,
     fused_max_docs: int = -1,
 ) -> list[tuple[int, int]]:
+    from ..reliability import pin, unpin
     from .text import quality_gopher_rules
 
     docs = table(spark, sf_dir, "documents")
@@ -1625,7 +1628,7 @@ def _logit_weight_rows(
     nf = QC_BUCKETS + 1
     # r14 loop restructure (guide §2.3 "aggregate before you shuffle" /
     # §2.4 "remove shuffles outright"): densify the sparse (doc, feat,
-    # code) table into ONE persisted row per doc — a 65-slot long ARRAY
+    # code) table into ONE pinned row per doc — a 65-slot long ARRAY
     # (the feature space is a fixed 64-bucket grid + bias, so the dense
     # row is narrower than the 65 sparse rows + replicated y it
     # replaces). One aggregation builds the per-doc tf map AND the gram
@@ -1663,7 +1666,7 @@ def _logit_weight_rows(
     # Partition count sizes to the dense-row bound (the r13 loop's
     # sizing, kept scale-adaptive: ~200k code slots per task — a few
     # tasks at gate scale, cluster-wide at 10⁹ docs); the
-    # localCheckpoint materializes base once AND truncates its lineage
+    # pin materializes base once AND truncates its lineage
     # so the 16 iteration plans are each a handful of nodes over an RDD
     # scan, not the full tokenize/gopher tree re-analyzed per step.
     nparts = max(
@@ -1673,11 +1676,10 @@ def _logit_weight_rows(
             n_docs * nf // 200_000 + 1,
         ),
     )
-    base = (
+    base = pin(
         labels.join(per_doc, "doc_id", "left")
         .select("y", F.array(*code_slots).alias("codes"))
         .repartition(nparts, "doc_id")
-        .localCheckpoint()
     )
 
     w = {j: 0 for j in range(nf)}
@@ -1726,8 +1728,7 @@ def _logit_weight_rows(
             - _trunc_div(w[j], 2000)
             for j in range(nf)
         }
-    # base is a localCheckpoint — its backing RDD is released by the
-    # ContextCleaner once this frame goes out of scope.
+    unpin(base)
     return [(int(j), int(w[j])) for j in range(nf)]
 
 

@@ -2033,11 +2033,10 @@ def _pq_fit(
     stats collect): per iteration the driver folds M×K×P tiny partial
     rows in sorted order, so accumulation is run-to-run deterministic.
     """
-    from pyspark import StorageLevel
-
+    from ..reliability import pin, unpin
     from .ml import _assign
 
-    emb = emb.persist(StorageLevel.MEMORY_AND_DISK)
+    emb = pin(emb, eager=False)  # the count below materializes it
     n = emb.count()
     step = max(1, n // k)
     init = (
@@ -2102,7 +2101,7 @@ def _pq_fit(
             new_books.append(b)
         books = new_books
         bc.destroy()
-    emb.unpersist(blocking=False)
+    unpin(emb)
     return books, n
 
 

@@ -1200,18 +1200,18 @@ def _bpe_merge_rows(
         .select(F.regexp_replace("w", "(.)", "$1|").alias("enc"), "n_w")
     )
 
-    from pyspark.storagelevel import StorageLevel
+    from ..reliability import pin, unpin
 
-    cur = wf.persist(StorageLevel.MEMORY_AND_DISK)
+    cur = pin(wf, eager=False)
     # small-vocab tier (r15): the tier-sizing count is ALSO what
-    # materializes the persisted distinct-word table, so the gate costs
+    # materializes the pinned distinct-word table, so the gate costs
     # no extra pass; pass fused_max_words=0 to force the per-round
     # distributed loop (tests)
     if fused_max_words < 0:
         fused_max_words = BPE_FUSED_MAX_WORDS
     if 0 < fused_max_words and cur.count() <= fused_max_words:
         rows = _bpe_fused_rows(cur)
-        cur.unpersist(blocking=False)
+        unpin(cur)
         return rows
     prev = None
     merges: list[tuple[int, str, int]] = []
@@ -1236,10 +1236,10 @@ def _bpe_merge_rows(
                 ).alias("pair"),
             )
         )
-        # this argmax job is ALSO what materializes cur's cache (built
-        # lazily from prev's cached frame), so the loop pays ONE job per
-        # merge instead of argmax + an extra count() materializer —
-        # prev is only released after cur has been realized from it
+        # this argmax job is ALSO what materializes cur's lazy pin (built
+        # from prev's pinned blocks), so the loop pays ONE job per merge
+        # instead of argmax + an extra count() materializer — prev is
+        # only released after cur has been realized from it
         top = (
             pairs.groupBy("pair")
             .agg(F.sum("n_w").cast("bigint").alias("n_pair"))
@@ -1248,20 +1248,23 @@ def _bpe_merge_rows(
             .collect()
         )
         if prev is not None:
-            prev.unpersist(blocking=False)
+            unpin(prev)
         if not top:
             break
         pair, n_pair = top[0]["pair"], int(top[0]["n_pair"])
         merges.append((t + 1, pair, n_pair))
         s1, s2 = pair.split(" ")
-        nxt = cur.select(
-            F.expr(f"replace(enc, '{s1}|{s2}|', '{s1}{s2}|')").alias("enc"),
-            "n_w",
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        nxt = pin(
+            cur.select(
+                F.expr(f"replace(enc, '{s1}|{s2}|', '{s1}{s2}|')").alias("enc"),
+                "n_w",
+            ),
+            eager=False,
+        )
         prev, cur = cur, nxt
-    cur.unpersist(blocking=False)
+    unpin(cur)
     if prev is not None:
-        prev.unpersist(blocking=False)
+        unpin(prev)
     return merges
 
 

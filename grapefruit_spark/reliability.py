@@ -19,6 +19,13 @@ mechanisms exist:
 env var), every iterative operator becomes fault-tolerant with no code
 change; otherwise it degrades to the fast local mode. On a 1000-executor
 cluster running hour-long iterative jobs, set the dir.
+
+``pin`` is the package's only way to materialize a frame: no module calls
+``persist``, ``cache``, ``localCheckpoint`` or ``checkpoint`` itself
+(``tests/test_reliability.py`` scans for them). A pin is never registered
+in the session's ``CacheManager``, which matches cached data by plan —
+for a file source, by path — and so would serve one client's stale blocks
+to another client, or to a later call after the file was replaced.
 """
 
 from __future__ import annotations

@@ -68,25 +68,20 @@ def write_any(
     """Write a dataset; ``partition_by`` lays out hive-style directories so
     downstream scans get partition pruning; ``dynamic_overwrite`` replaces
     only the partitions present in ``df`` (the idempotent-backfill mode a
-    100 TB pipeline needs)."""
+    100 TB pipeline needs). The mode is a per-write option: the session's
+    ``partitionOverwriteMode`` is never touched, so a concurrent static
+    overwrite by another client of the session stays static."""
     if fmt not in FORMATS:
         raise ValueError(f"format must be one of {FORMATS}, got {fmt!r}")
-    spark = df.sparkSession
     if fmt == "csv":
         options.setdefault("header", "true")
+    if dynamic_overwrite:
+        options["partitionOverwriteMode"] = "dynamic"
     writer = df.write.format(fmt).mode(mode).options(**options)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     with _clear_module_error(fmt):
-        if dynamic_overwrite:
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                writer.save(path)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        else:
-            writer.save(path)
+        writer.save(path)
 
 
 def write_sorted(

@@ -624,16 +624,28 @@ def land_file(df: DataFrame, src_dir: str, name: str, mtime: float) -> None:
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str) -> DataFrame:
     """Drain a bounded stream into an in-memory table (availableNow) and
     return the result as a batch DataFrame — the batch/stream parity
-    harness used by tests."""
+    harness used by tests.
+
+    The memory sink registers its table as a session temp view. Here the
+    view's name is unique per call and the view is dropped once the
+    returned frame has resolved it, so concurrent calls with the same
+    ``name`` never read each other's output and the session keeps no
+    view."""
+    import uuid
+
+    view = f"{name}_{uuid.uuid4().hex}"
     q = (
         stream_df.writeStream.format("memory")
-        .queryName(name)
+        .queryName(view)
         .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return stream_df.sparkSession.table(name)
+    spark = stream_df.sparkSession
+    out = spark.table(view)
+    spark.catalog.dropTempView(view)
+    return out
 
 
 def stream_dedup_within_watermark(

@@ -24,22 +24,38 @@ def spark():
     spark.stop()  # also removes the accumulator server's /tmp socket file
 
 
+def session_state(spark) -> dict:
+    """What one client of a shared session could see another write: the
+    SQL confs, the temp views and whether any data is cached."""
+    return {
+        "confs": spark.conf.getAll,
+        "temp_views": sorted(t.name for t in spark.catalog.listTables() if t.isTemporary),
+        "cache_empty": spark._jsparkSession.sharedState().cacheManager().isEmpty(),
+    }
+
+
+#: ``session_state`` just before and just after ``registry_frames`` builds
+REGISTRY_BUILD_STATE: dict[str, dict] = {}
+
+
 @pytest.fixture(scope="session")
 def registry_frames(spark):
     """Every registered query's DataFrame at sf0.001, built once for the
-    two whole-registry sweeps (``test_oracle_types`` and ``test_plans``).
+    whole-registry sweeps (``test_oracle_types`` and ``test_plans``).
 
     Building is not plan-only: eager query functions run Spark jobs
     before they return (see ``test_no_hugeint_and_type_class_parity``),
-    and leave ~13-14 MB in 32-37 persisted RDDs. The sweeps read only
-    schemas and plans, so those blocks are released here rather than
-    held for the rest of the session. Cached-data entries stay registered, so the
-    plans are unchanged; a later query that reads one recomputes it."""
+    and leave ~13-14 MB in pinned RDDs. The sweeps read only schemas and
+    plans, so those blocks are released here rather than held for the
+    rest of the session; a frame that read one would fail. The session
+    state around the build is kept in ``REGISTRY_BUILD_STATE``."""
     from grapefruit_spark.operators import all_queries
 
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())
+    REGISTRY_BUILD_STATE["before"] = session_state(spark)
     frames = {name: fn(spark, SF_DIR) for name, fn in all_queries().items()}
+    REGISTRY_BUILD_STATE["after"] = session_state(spark)
     for rdd_id in set(jsc.getPersistentRDDs().keySet()) - before:
         jsc.sc().unpersistRDD(rdd_id, False)
     return frames

@@ -9,7 +9,10 @@ import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-ROUND_FILES = ("bench.py", "BENCH_r*", "CORRECTNESS_r*", "PERF_r*", "VERIFY_r*")
+ROUND_FILES = (
+    "bench.py", "BENCH_r*", "CORRECTNESS_r*", "PERF_r*", "VERIFY_r*",
+    "OPTIMIZATION_r*", "VERDICT.md", "ADVICE.md", "PLANS.md",
+)
 
 
 def test_no_round_records_in_the_repo_root_or_the_package():

@@ -512,7 +512,7 @@ def test_band_curve_uses_miniband_masks(spark):
     the single mini-band join + bit_or masks (the nesting rewrite); if
     a refactor reverts to one band join per config, the mask aggregate
     disappears and this canary fails. The operator eagerly collects the
-    one-row aggregate (to unpersist the signature cache), so the mask
+    one-row aggregate (to unpin the signature frame), so the mask
     plan is read from the module hook, not the returned frame."""
     from grapefruit_spark.operators import dedup
 

@@ -2,16 +2,26 @@
 
 The interactive setting has several clients in one session, so a pin must
 record the RDD it materialized itself — never one another thread persisted
-at the same moment — and unpin must release only that RDD."""
+at the same moment — and unpin must release only that RDD. ``pin`` is the
+package's one way to materialize a frame: nothing it builds is served from
+the session's plan-matched cache, so a query reads its input files as they
+are when it runs."""
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
 import sys
 import threading
 
 from pyspark.sql.classic.dataframe import DataFrame
 
 from grapefruit_spark.reliability import pin, unpin
+
+from .conftest import SF_DIR
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _own_rdd_id(df) -> int:
@@ -89,3 +99,40 @@ def test_concurrent_pins_release_only_their_own_blocks(spark):
     assert not errors, errors[0][:800]
     assert not wrong, f"{len(wrong)} of {2 * rounds} pins carried another RDD's id"
     assert _persistent_ids(spark) - before == set()
+
+
+def test_pin_is_the_only_materialization_in_the_package():
+    """No module but reliability.py persists, caches or checkpoints a frame:
+    ``persist``/``cache`` register it in the session's CacheManager, and a
+    raw ``localCheckpoint`` skips pin's durable-checkpoint rule."""
+    root = os.path.join(REPO, "grapefruit_spark")
+    banned = re.compile(r"\.persist\(|\.cache\(\)|\.localCheckpoint\(|\.checkpoint\(|StorageLevel")
+    offenders = []
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            if f.endswith(".py") and p != os.path.join(root, "reliability.py"):
+                with open(p, encoding="utf-8") as fh:
+                    for i, line in enumerate(fh, 1):
+                        if banned.search(line):
+                            offenders.append(f"{os.path.relpath(p, REPO)}:{i}")
+    assert offenders == [], f"materialize through reliability.pin: {offenders}"
+
+
+def test_dedup_minhash_reads_a_replaced_file_afresh(spark, tmp_path):
+    """A second call after the documents file is replaced answers for the
+    new file: no signature frame of the first call is served by path."""
+    from grapefruit_spark.operators.dedup import dedup_minhash
+
+    def pairs(sf_dir):
+        return sorted(tuple(r) for r in dedup_minhash(spark, sf_dir).collect())
+
+    larger = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    path = tmp_path / "documents.parquet"
+    shutil.copy(os.path.join(SF_DIR, "documents.parquet"), path)
+    old = pairs(str(tmp_path))
+    fresh = pairs(larger)
+    assert old != fresh  # the two inputs must tell the answers apart
+    shutil.copy(os.path.join(larger, "documents.parquet"), tmp_path / "next.parquet")
+    os.replace(tmp_path / "next.parquet", path)
+    assert pairs(str(tmp_path)) == fresh

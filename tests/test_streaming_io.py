@@ -86,12 +86,20 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert "PartitionFilters: [" in plan and "part" in plan.split("PartitionFilters")[1][:120]
 
 
-def test_dynamic_partition_overwrite(spark, tmp_path):
+def test_dynamic_partition_overwrite(spark, tmp_path, monkeypatch):
+    """The dynamic mode is a per-write option: the write sets no session
+    conf, so a concurrent static overwrite by another client stays static."""
+    from pyspark.sql.conf import RuntimeConfig
+
     path = str(tmp_path / "dyn")
     base = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "part"])
     write_any(base, path, partition_by=["part"])
     patch = spark.createDataFrame([(99, "b")], ["id", "part"])
+    sets = []
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, key, value: sets.append(key))
     write_any(patch, path, partition_by=["part"], mode="overwrite", dynamic_overwrite=True)
+    monkeypatch.undo()
+    assert sets == []
     got = {(r["id"], r["part"]) for r in read_any(spark, path).collect()}
     assert got == {(1, "a"), (99, "b")}  # partition 'a' untouched
 

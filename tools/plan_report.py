@@ -1,7 +1,7 @@
 """Plan-quality survey: one summary row per query — exchange count,
 join strategies, scan pushdown, Python-UDF presence, codegen coverage.
 
-Usage: python tools/plan_report.py [sf_dir] > PLANS.md
+Usage: python tools/plan_report.py [sf_dir] > plan_report.md
 The table is the at-a-glance answer to "would this plan survive scale-up":
 broadcast joins on dim sides, few exchanges, filters at the scan, no
 row-level Python in any hot path.

@@ -8,7 +8,7 @@ then times representative heavy operators at both scales and prints the
 wall-clock ratio. A plan whose ratio tracks ~10× has a linear hot path;
 a ratio far above 10× means a quadratic term is hiding; ratios ≲2× mean
 the local numbers are fixed-overhead-dominated and say little about the
-asymptote (the usual result at these sizes — see PLANS.md).
+asymptote (the usual result at these sizes).
 
 Usage: python tools/scale_probe.py
 """
