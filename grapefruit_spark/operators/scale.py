@@ -52,6 +52,7 @@ def write_bucketed(
     bucket_key: str,
     n_buckets: int = 16,
     sort_by: str | None = None,
+    path: str | None = None,
 ) -> None:
     """Persist a dataset bucketed (and optionally sorted) on its join key.
 
@@ -59,11 +60,14 @@ def write_bucketed(
     pre-shuffle is paid once at write time and amortized over every later
     join. This is the Spark-native version of the reference's
     hash-partitioned intermediate files (MapleJuice.java:677), made
-    durable and reusable.
+    durable and reusable. With ``path`` the files go there instead of
+    under the session's warehouse directory.
     """
     writer = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, bucket_key)
     if sort_by:
         writer = writer.sortBy(sort_by)
+    if path:
+        writer = writer.option("path", path)
     writer.saveAsTable(table_name)
 
 
@@ -87,8 +91,10 @@ def scale_skew_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain GROUP BY + JOIN.
     """
     import os
+    import uuid
 
     from ..catalog import table
+    from ..streaming.events import scratch_dir
 
     li = table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
@@ -103,24 +109,13 @@ def scale_skew_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
         salt_buckets=8,
     ).withColumnRenamed("l_suppkey", "s_suppkey")
     supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    for t in ("gf_scale_sim_srev", "gf_scale_sim_supp"):
-        # a managed-table dir left by a PREVIOUS process survives the
-        # in-memory catalog, and saveAsTable refuses to adopt an
-        # existing location — drop both the entry and the directory
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        wh = spark.conf.get("spark.sql.warehouse.dir", "")
-        if wh.startswith("file:"):
-            import shutil
-            from urllib.parse import urlparse
-
-            shutil.rmtree(
-                os.path.join(urlparse(wh).path, t.lower()), ignore_errors=True
-            )
-    write_bucketed(srev, "gf_scale_sim_srev", "s_suppkey", 8)
-    write_bucketed(supp, "gf_scale_sim_supp", "s_suppkey", 8)
-    joined = bucketed_join(
-        spark, "gf_scale_sim_srev", "gf_scale_sim_supp", "s_suppkey"
-    )
+    # tables of this call only, named and stored apart from every other
+    # call's: the frame returned reads them whenever it runs
+    base = scratch_dir("gf_scale_sim_")
+    srev_t, supp_t = (f"gf_scale_sim_{t}_{uuid.uuid4().hex}" for t in ("srev", "supp"))
+    write_bucketed(srev, srev_t, "s_suppkey", 8, path=os.path.join(base, "srev"))
+    write_bucketed(supp, supp_t, "s_suppkey", 8, path=os.path.join(base, "supp"))
+    joined = bucketed_join(spark, srev_t, supp_t, "s_suppkey")
     return (
         joined.groupBy("s_nationkey")
         .agg(

@@ -167,6 +167,11 @@ class Sdfs:
         file. Returns the new part-file count. (The reference's analogue
         is re-replication healing in SdfsServer.java — same maintenance
         slot, storage-layer concern.)
+
+        The round-robin repartition drops the key order ``merge`` writes,
+        so a compacted table's key column no longer delta-codes in runs:
+        ~11.5 instead of ~9.9 stored bytes a row on ``sdfs_cdc``'s orders
+        rows, until merges rewrite those rows.
         """
         cols = self._partition_cols(name)
         self._rewrite(self.get(name).repartition(target_files, *cols), name,
@@ -205,10 +210,19 @@ class Sdfs:
         reference's SDFS granularity (put replaces a whole file,
         SdfsServer.java put/delete). A partitioned dataset keeps its
         partition columns.
+
+        The update batch is written sorted by ``key_cols`` within its own
+        partitions (no shuffle; after the partition columns, which the
+        writer groups by anyway), so its keys delta-code in Parquet v2
+        pages at under a byte a row. Only the batch is sorted: survivors
+        keep the order they were written in, so every part file stays a
+        key-sorted run from some earlier merge, and sorting the whole
+        table would add a sort of every stored row to each merge.
         """
         if not self.exists(name):
-            self.put(updates, name)
+            self.put(updates.sortWithinPartitions(*key_cols), name)
             return
+        cols = self._partition_cols(name)
         survivors = self.get(name).join(updates.select(*key_cols), key_cols, "left_anti")
-        merged = survivors.unionByName(updates)
-        self._rewrite(merged, name, "__merging", self._partition_cols(name))
+        merged = survivors.unionByName(updates.sortWithinPartitions(*cols, *key_cols))
+        self._rewrite(merged, name, "__merging", cols)

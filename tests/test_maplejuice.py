@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import random
 
 import pandas as pd
 import pyarrow.parquet as pq
@@ -334,15 +335,26 @@ def test_sdfs_hides_internal_dirs(spark, tmp_path):
             fs.put(spark.range(1), bad)
 
 
-def _codecs(files: list[str]) -> set[str]:
-    """Every column chunk's compression codec across ``files``."""
-    codecs = set()
+def _column_chunks(files: list[str]):
+    """Every column chunk's metadata across ``files``."""
     for f in files:
         md = pq.ParquetFile(f).metadata
         for rg in range(md.num_row_groups):
             for col in range(md.num_columns):
-                codecs.add(md.row_group(rg).column(col).compression)
-    return codecs
+                yield md.row_group(rg).column(col)
+
+
+def _codecs(files: list[str]) -> set[str]:
+    """Every column chunk's compression codec across ``files``."""
+    return {chunk.compression for chunk in _column_chunks(files)}
+
+
+def _encodings(files: list[str]) -> dict[str, set[str]]:
+    """Each column's encodings across every column chunk of ``files``."""
+    out: dict[str, set[str]] = {}
+    for chunk in _column_chunks(files):
+        out.setdefault(chunk.path_in_schema, set()).update(chunk.encodings)
+    return out
 
 
 def test_sdfs_writes_zstd(spark, tmp_path):
@@ -371,6 +383,78 @@ def test_handed_in_session_gets_the_codec(spark, tmp_path):
         spark.range(100).withColumn("s", F.col("id").cast("string")).write.parquet(out)
         files = [os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet")]
         assert files and _codecs(files) == {"ZSTD"}
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("case", ["existing", "absent", "partitioned"])
+def test_sdfs_merge_writes_the_batch_in_key_order(spark, tmp_path, case):
+    """A shuffled update batch lands as key-sorted runs: every part file
+    holding batch rows holds them with non-decreasing keys (for a
+    partitioned dataset, each file sits in one partition directory)."""
+    fs = Sdfs(spark, str(tmp_path / "wh11"))
+    schema = "k long, src string, p int"
+    if case != "absent":
+        stored = spark.createDataFrame([(k, "stored", k % 3) for k in range(0, 2000, 2)], schema)
+        fs.put(stored.repartition(3), "t", partition_by=["p"] if case == "partitioned" else None)
+    keys = list(range(1000, 3000, 3))
+    random.Random(11).shuffle(keys)
+    batch = spark.createDataFrame([(k, "batch", k % 3) for k in keys], schema)
+    fs.merge("t", batch.repartition(2), ["k"])
+    held = 0
+    for f in fs.ls("t"):
+        t = pq.ParquetFile(f).read(columns=["k", "src"]).to_pydict()
+        if "batch" in t["src"]:
+            held += t["src"].count("batch")
+            assert t["k"] == sorted(t["k"]), f"batch rows out of key order in {f}"
+    assert held == len(keys)
+
+
+def test_sdfs_writes_parquet_v2_pages(spark, tmp_path):
+    """put, merge and compact write Parquet v2 pages: a long column with
+    more distinct values than a 1 MB dictionary page holds (131,072
+    longs) is DELTA_BINARY_PACKED, not PLAIN, and a dictionary-coded
+    column is v2's RLE_DICTIONARY, never v1's PLAIN_DICTIONARY."""
+    fs = Sdfs(spark, str(tmp_path / "wh12"))
+    n = 200_000
+    df = spark.range(n, numPartitions=1).select(
+        F.col("id").alias("k"), (F.col("id") % 7).cast("string").alias("tag")
+    )
+
+    def check() -> None:
+        big = [f for f in fs.ls("t") if pq.ParquetFile(f).metadata.num_rows > 131_072]
+        assert big, "no part file holds more distinct keys than a dictionary page"
+        key = _encodings(big)["k"]
+        assert "DELTA_BINARY_PACKED" in key and "PLAIN" not in key, key
+        enc = _encodings(fs.ls("t"))
+        assert "RLE_DICTIONARY" in enc["tag"]
+        assert not any("PLAIN_DICTIONARY" in e for e in enc.values()), enc
+
+    fs.put(df, "t")
+    check()
+    fs.merge("t", spark.createDataFrame([(1, "u"), (n + 5, "n")], "k long, tag string"), ["k"])
+    check()
+    assert fs.compact("t", 1) == 1
+    check()
+    assert fs.get("t").count() == n + 1
+
+
+def test_handed_in_session_gets_v2_pages(spark, tmp_path):
+    """A session built elsewhere and set to v1 pages writes v2 pages once
+    ``apply_engine_confs`` has run on it."""
+    key = "parquet.writer.version"
+    old = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "v1")
+        apply_engine_confs(spark)
+        out = str(tmp_path / "handed_in_v2")
+        spark.range(100).withColumn("s", (F.col("id") % 3).cast("string")).write.parquet(out)
+        files = [os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet")]
+        enc = _encodings(files)
+        assert "RLE_DICTIONARY" in enc["s"] and "PLAIN_DICTIONARY" not in enc["s"], enc
     finally:
         if old is None:
             spark.conf.unset(key)

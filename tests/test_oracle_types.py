@@ -143,7 +143,7 @@ def test_building_the_registry_leaves_the_shared_session_unchanged(registry_fram
     """Clients share one session, so building a query must not write state
     another client's query reads: every SQL conf, the temp views and the
     empty cache are as they were before the whole registry was built
-    (``scale_skew_sim``'s managed tables are not temp views)."""
+    (``scale_skew_sim``'s catalog tables are not temp views)."""
     from .conftest import REGISTRY_BUILD_STATE
 
     before, after = REGISTRY_BUILD_STATE["before"], REGISTRY_BUILD_STATE["after"]

@@ -1,12 +1,21 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from grapefruit_spark.operators.scale import bucketed_join, salted_agg, write_bucketed
+from grapefruit_spark.operators.scale import (
+    ORACLE,
+    bucketed_join,
+    salted_agg,
+    scale_skew_sim,
+    write_bucketed,
+)
 from grapefruit_spark.plans import executed_plan
 
 from .conftest import SF_DIR
+from .util import assert_matches_oracle
 
 
 def test_salted_agg_matches_plain(spark):
@@ -108,3 +117,12 @@ def test_aqe_splits_skewed_join(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_scale_skew_sim_frame_outlives_a_later_call(spark, duck):
+    """A later call writes tables of its own: the frame of an earlier call,
+    on other data, still reads its own tables and gives its own answer."""
+    first = scale_skew_sim(spark, SF_DIR)
+    later = scale_skew_sim(spark, os.path.join(os.path.dirname(SF_DIR), "sf0.01"))
+    assert_matches_oracle(first, duck, ORACLE["scale_skew_sim"])
+    assert sum(r["n_items"] for r in later.collect()) > sum(r["n_items"] for r in first.collect())
