@@ -1469,18 +1469,14 @@ def write_layout_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     tight footer stats) stay footer-asserted in pytest where they
     belong."""
     import os
+    import tempfile
 
+    from ..reliability import pin
     from ..sources.io import write_sorted, write_zorder
-    from ..streaming.events import scratch_dir
 
-    base = scratch_dir("grapefruit_layout_sim_")
     orders = table(spark, sf_dir, "orders")
-    write_sorted(orders, os.path.join(base, "sorted"), ["o_orderdate"])
-    write_zorder(
-        orders, os.path.join(base, "zorder"), ["o_custkey", "o_totalprice"]
-    )
 
-    def profile(layout: str) -> DataFrame:
+    def profile(base: str, layout: str) -> DataFrame:
         back = read_parquet(spark, os.path.join(base, layout))
         return back.select(
             F.lit(layout).alias("layout"),
@@ -1491,7 +1487,12 @@ def write_layout_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total"),
         )
 
-    return profile("sorted").unionByName(profile("zorder"))
+    with tempfile.TemporaryDirectory(prefix="grapefruit_layout_sim_") as base:
+        write_sorted(orders, os.path.join(base, "sorted"), ["o_orderdate"])
+        write_zorder(
+            orders, os.path.join(base, "zorder"), ["o_custkey", "o_totalprice"]
+        )
+        return pin(profile(base, "sorted").unionByName(profile(base, "zorder")))
 
 
 _LAYOUT_PROFILE_SQL = """

@@ -1196,29 +1196,24 @@ def stream_markov_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch boundary — and the summed deltas rebuild the full transition
     matrix. Shares events_markov_transitions' oracle, so the incremental
     path is hash-checked against the one-shot batch SQL."""
+    import tempfile
     import time as _time
 
-    from ..streaming.events import (
-        land_file,
-        run_to_memory,
-        scratch_dir,
-        scratch_release,
-        stream_markov_transitions,
-    )
+    from ..streaming.events import land_file, run_to_memory, stream_markov_transitions
 
-    src = scratch_dir("grapefruit_markov_sim_")
     ev = table(spark, sf_dir, "events")
     lo, hi = ev.agg(F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))).first()
     mid = F.timestamp_micros(F.lit((lo + hi) // 2))
     now = _time.time()
-    land_file(ev.where(F.col("ts") < mid), src, "b1.parquet", now - 100)
-    land_file(ev.where(F.col("ts") >= mid), src, "b2.parquet", now - 50)
-    deltas = run_to_memory(
-        stream_markov_transitions(spark, src, max_files_per_trigger=1),
-        "drv_markov_sim",
-        output_mode="append",
-    )
-    scratch_release(src)  # drained; the memory sink holds the deltas
+    # drained into the memory sink, which holds the deltas
+    with tempfile.TemporaryDirectory(prefix="grapefruit_markov_sim_") as src:
+        land_file(ev.where(F.col("ts") < mid), src, "b1.parquet", now - 100)
+        land_file(ev.where(F.col("ts") >= mid), src, "b2.parquet", now - 50)
+        deltas = run_to_memory(
+            stream_markov_transitions(spark, src, max_files_per_trigger=1),
+            "drv_markov_sim",
+            output_mode="append",
+        )
     steps = deltas.groupBy("prev_type", "next_type").agg(F.sum("n").alias("n"))
     totals = steps.select(F.col("prev_type").alias("pt"), "n").groupBy("pt").agg(
         F.sum("n").alias("n_from")

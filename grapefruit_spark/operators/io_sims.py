@@ -12,10 +12,14 @@ so a plain-SQL oracle replays them with no filesystem at all.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import read_parquet, table
+from ..reliability import pin
 
 ORACLE: dict[str, str] = {}
 
@@ -36,34 +40,32 @@ def write_partition_overwrite_sim(spark: SparkSession, sf_dir: str) -> DataFrame
     At 100 TB this is the nightly-restatement shape: rewrite one day /
     one priority class in place without touching sibling partitions.
     """
-    import os
-
     from ..sources.io import write_any
-    from ..streaming.events import scratch_dir
 
-    base = os.path.join(scratch_dir("gf_dynovr_sim_"), "orders_by_prio")
     orders = (
         table(spark, sf_dir, "orders")
         .where(F.col("o_orderkey").isNotNull())
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
     )
-    write_any(orders, base, partition_by=["o_orderpriority"])
     restated = orders.where(F.col("o_orderpriority") == "1-URGENT").withColumn(
         "o_totalprice", F.col("o_totalprice") * 2  # ×2 is exact in binary fp
     )
-    write_any(restated, base, partition_by=["o_orderpriority"], dynamic_overwrite=True)
-    back = read_parquet(spark, base)
-    return (
-        back.groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("o_orderkey").alias("key_sum"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("total"),
+    with tempfile.TemporaryDirectory(prefix="gf_dynovr_sim_") as tmp:
+        base = os.path.join(tmp, "orders_by_prio")
+        write_any(orders, base, partition_by=["o_orderpriority"])
+        write_any(restated, base, partition_by=["o_orderpriority"], dynamic_overwrite=True)
+        back = read_parquet(spark, base)
+        return pin(
+            back.groupBy("o_orderpriority")
+            .agg(
+                F.count(F.lit(1)).alias("n_orders"),
+                F.sum("o_orderkey").alias("key_sum"),
+                F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
+                .cast("double")
+                .alias("total"),
+            )
+            .orderBy("o_orderpriority")
         )
-        .orderBy("o_orderpriority")
-    )
 
 
 ORACLE["write_partition_overwrite_sim"] = """
@@ -99,69 +101,65 @@ def schema_evolution_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
       poison-pill contract (corrupt rows quarantine, they never abort
       the job and never leak into the parsed column).
     """
-    import os
-
-    from ..streaming.events import scratch_dir
-
-    base = scratch_dir("gf_schevo_sim_")
     orders = (
         table(spark, sf_dir, "orders")
         .where(F.col("o_orderkey").isNotNull())
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
     )
 
-    # --- merge_schema leg
-    narrow = orders.where(F.col("o_orderkey") % 2 == 0).select(
-        "o_orderkey", "o_totalprice"
-    )
-    wide = orders.where(F.col("o_orderkey") % 2 == 1)
-    p1 = os.path.join(base, "m", "b1")
-    p2 = os.path.join(base, "m", "b2")
-    narrow.write.mode("overwrite").parquet(p1)
-    wide.write.mode("overwrite").parquet(p2)
-    merged = spark.read.option("mergeSchema", "true").parquet(p1, p2)
-    # degenerate-corpus guard (ADVICE r10): if every surviving key has
-    # one parity, one staged batch is empty. THIS Spark's writer still
-    # emits a schema-bearing empty part (verified: all-even / all-odd /
-    # empty corpora all pass unguarded), but the hostile-input contract
-    # must not hinge on that writer detail — when the evolved column is
-    # absent every read-back row is by definition missing it.
-    flagged = (
-        F.sum(F.col("o_orderpriority").isNull().cast("long"))
-        if "o_orderpriority" in merged.columns
-        else F.sum(F.lit(1).cast("long"))  # NULL on empty, like the oracle's sum
-    )
-    merge_row = merged.agg(
-        F.lit("merge_schema").alias("stage"),
-        F.count(F.lit(1)).alias("n_rows"),
-        flagged.alias("n_flagged"),
-        F.sum("o_orderkey").alias("checksum"),
-    )
-
-    # --- permissive_quarantine leg
-    raw = os.path.join(base, "raw_json")
-    lines = orders.select(
-        F.when(F.col("o_orderkey") % 7 == 0, F.lit('{"k": oops'))
-        .otherwise(
-            F.concat(F.lit('{"k":'), F.col("o_orderkey").cast("string"), F.lit("}"))
+    with tempfile.TemporaryDirectory(prefix="gf_schevo_sim_") as base:
+        # --- merge_schema leg
+        narrow = orders.where(F.col("o_orderkey") % 2 == 0).select(
+            "o_orderkey", "o_totalprice"
         )
-        .alias("value")
-    )
-    lines.write.mode("overwrite").text(raw)
-    parsed = (
-        spark.read.schema("k bigint, _bad string")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_bad")
-        .json(raw)
-    )
-    quarantine_row = parsed.agg(
-        F.lit("permissive_quarantine").alias("stage"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("_bad").isNotNull().cast("long")).alias("n_flagged"),
-        F.sum("k").alias("checksum"),
-    )
+        wide = orders.where(F.col("o_orderkey") % 2 == 1)
+        p1 = os.path.join(base, "m", "b1")
+        p2 = os.path.join(base, "m", "b2")
+        narrow.write.mode("overwrite").parquet(p1)
+        wide.write.mode("overwrite").parquet(p2)
+        merged = spark.read.option("mergeSchema", "true").parquet(p1, p2)
+        # degenerate-corpus guard (ADVICE r10): if every surviving key has
+        # one parity, one staged batch is empty. THIS Spark's writer still
+        # emits a schema-bearing empty part (verified: all-even / all-odd /
+        # empty corpora all pass unguarded), but the hostile-input contract
+        # must not hinge on that writer detail — when the evolved column is
+        # absent every read-back row is by definition missing it.
+        flagged = (
+            F.sum(F.col("o_orderpriority").isNull().cast("long"))
+            if "o_orderpriority" in merged.columns
+            else F.sum(F.lit(1).cast("long"))  # NULL on empty, like the oracle's sum
+        )
+        merge_row = merged.agg(
+            F.lit("merge_schema").alias("stage"),
+            F.count(F.lit(1)).alias("n_rows"),
+            flagged.alias("n_flagged"),
+            F.sum("o_orderkey").alias("checksum"),
+        )
 
-    return merge_row.unionByName(quarantine_row).orderBy("stage")
+        # --- permissive_quarantine leg
+        raw = os.path.join(base, "raw_json")
+        lines = orders.select(
+            F.when(F.col("o_orderkey") % 7 == 0, F.lit('{"k": oops'))
+            .otherwise(
+                F.concat(F.lit('{"k":'), F.col("o_orderkey").cast("string"), F.lit("}"))
+            )
+            .alias("value")
+        )
+        lines.write.mode("overwrite").text(raw)
+        parsed = (
+            spark.read.schema("k bigint, _bad string")
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_bad")
+            .json(raw)
+        )
+        quarantine_row = parsed.agg(
+            F.lit("permissive_quarantine").alias("stage"),
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("_bad").isNotNull().cast("long")).alias("n_flagged"),
+            F.sum("k").alias("checksum"),
+        )
+
+        return pin(merge_row.unionByName(quarantine_row).orderBy("stage"))
 
 
 ORACLE["schema_evolution_sim"] = """
@@ -206,38 +204,35 @@ def write_manifest_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     columnar pass; the manifest itself is a map-side-combined groupBy
     over the partition axis — O(partitions) output.
     """
-    import os
-
-    from ..streaming.events import scratch_dir
-
-    base = os.path.join(scratch_dir("gf_manifest_sim_"), "docs_by_lang")
     docs = (
         table(spark, sf_dir, "documents")
         .where(F.col("doc_id").isNotNull() & F.col("lang").isNotNull())
         .select("doc_id", "lang", "n_chars")
     )
-    docs.write.partitionBy("lang").mode("overwrite").parquet(base)
-    # explicit schema on read-back: hive partition discovery would
-    # otherwise TYPE-INFER the partition column, so a numeric-looking
-    # lang value (e.g. '90') silently round-trips as INT and changes
-    # the groupBy key type vs the source table's VARCHAR
-    back = spark.read.schema("doc_id bigint, n_chars bigint, lang string").parquet(
-        base
-    )
     checksum = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("bigint")
-    return (
-        back.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("doc_id").alias("min_key"),
-            F.max("doc_id").alias("max_key"),
-            F.sum(checksum).cast("bigint").alias("checksum"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
+    with tempfile.TemporaryDirectory(prefix="gf_manifest_sim_") as tmp:
+        base = os.path.join(tmp, "docs_by_lang")
+        docs.write.partitionBy("lang").mode("overwrite").parquet(base)
+        # explicit schema on read-back: hive partition discovery would
+        # otherwise TYPE-INFER the partition column, so a numeric-looking
+        # lang value (e.g. '90') silently round-trips as INT and changes
+        # the groupBy key type vs the source table's VARCHAR
+        back = spark.read.schema("doc_id bigint, n_chars bigint, lang string").parquet(
+            base
         )
-        .orderBy("lang")
-    )
+        return pin(
+            back.groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.min("doc_id").alias("min_key"),
+                F.max("doc_id").alias("max_key"),
+                F.sum(checksum).cast("bigint").alias("checksum"),
+                F.sum("n_chars").cast("bigint").alias("total_chars"),
+            )
+            .orderBy("lang")
+        )
 
 
 ORACLE["write_manifest_sim"] = """
@@ -288,12 +283,8 @@ def snapshot_read_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     operations are O(partitions) metadata, and read-as-of prunes to
     the listed files — no full-table rewrite at any version.
     """
-    import os
     from urllib.parse import unquote
 
-    from ..streaming.events import scratch_dir
-
-    base = scratch_dir("gf_snapshot_sim_")
     orders = (
         table(spark, sf_dir, "orders")
         .where(F.col("o_orderkey").isNotNull() & F.col("o_orderpriority").isNotNull())
@@ -307,13 +298,6 @@ def snapshot_read_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v4 rewrites the one partition holding delete matches: its v3
     # content minus the deleted rows
     b4 = b3.where(~(F.col("o_orderkey") % 3 == 0))
-    d1, d2, d3, d4 = (
-        os.path.join(base, b) for b in ("commit1", "commit2", "commit3", "commit4")
-    )
-    b1.write.partitionBy("o_orderpriority").mode("overwrite").parquet(d1)
-    b2.write.partitionBy("o_orderpriority").mode("overwrite").parquet(d2)
-    b3.write.partitionBy("o_orderpriority").mode("overwrite").parquet(d3)
-    b4.write.partitionBy("o_orderpriority").mode("overwrite").parquet(d4)
 
     def entries(d: str) -> list[tuple[str, str]]:
         """(data-path, partition-value) per hive partition dir of a commit."""
@@ -323,34 +307,43 @@ def snapshot_read_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
             if p.startswith("o_orderpriority=")
         ]
 
-    v1 = entries(d1)
-    v2 = v1 + entries(d2)
-    v3 = [e for e in v2 if e[1] != "1-URGENT"] + entries(d3)
-    v4 = [e for e in v3 if e[1] != "1-URGENT"] + entries(d4)
-
-    frames = []
-    for ver, manifest in ((1, v1), (2, v2), (3, v3), (4, v4)):
-        paths = [p for p, _ in manifest]
-        if paths:
-            snap = spark.read.schema("o_orderkey bigint, o_totalprice double").parquet(
-                *paths
-            )
-        else:  # degenerate corpus: an empty commit list still profiles
-            snap = spark.createDataFrame([], "o_orderkey bigint, o_totalprice double")
-        frames.append(
-            snap.agg(
-                F.lit(ver).alias("version"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("o_orderkey").alias("key_sum"),
-                F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
-                .cast("double")
-                .alias("total"),
-            )
+    with tempfile.TemporaryDirectory(prefix="gf_snapshot_sim_") as base:
+        d1, d2, d3, d4 = (
+            os.path.join(base, b) for b in ("commit1", "commit2", "commit3", "commit4")
         )
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return out.orderBy("version")
+        b1.write.partitionBy("o_orderpriority").mode("overwrite").parquet(d1)
+        b2.write.partitionBy("o_orderpriority").mode("overwrite").parquet(d2)
+        b3.write.partitionBy("o_orderpriority").mode("overwrite").parquet(d3)
+        b4.write.partitionBy("o_orderpriority").mode("overwrite").parquet(d4)
+
+        v1 = entries(d1)
+        v2 = v1 + entries(d2)
+        v3 = [e for e in v2 if e[1] != "1-URGENT"] + entries(d3)
+        v4 = [e for e in v3 if e[1] != "1-URGENT"] + entries(d4)
+
+        frames = []
+        for ver, manifest in ((1, v1), (2, v2), (3, v3), (4, v4)):
+            paths = [p for p, _ in manifest]
+            if paths:
+                snap = spark.read.schema("o_orderkey bigint, o_totalprice double").parquet(
+                    *paths
+                )
+            else:  # degenerate corpus: an empty commit list still profiles
+                snap = spark.createDataFrame([], "o_orderkey bigint, o_totalprice double")
+            frames.append(
+                snap.agg(
+                    F.lit(ver).alias("version"),
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum("o_orderkey").alias("key_sum"),
+                    F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
+                    .cast("double")
+                    .alias("total"),
+                )
+            )
+        out = frames[0]
+        for fr in frames[1:]:
+            out = out.unionByName(fr)
+        return pin(out.orderBy("version"))
 
 
 ORACLE["snapshot_read_sim"] = """

@@ -79,41 +79,37 @@ def mj_exe_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     mj_wordcount's oracle: the exe path must produce value-identical
     counts to both the declarative path and DuckDB.
     """
-    import os
+    import shlex
     import sys
-    import tempfile
 
     from ..maplejuice import juice_pipe, maple_pipe
 
-    d = os.path.join(tempfile.gettempdir(), "grapefruit_mj_exe")
-    os.makedirs(d, exist_ok=True)
-    mapper, reducer = os.path.join(d, "wc_maple.py"), os.path.join(d, "wc_juice.py")
-    with open(mapper, "w") as f:
-        f.write(
-            "import sys\n"
-            "for line in sys.stdin:\n"
-            "    for w in line.lower().split():\n"
-            "        print(f'{w}\\t1')\n"
-        )
-    with open(reducer, "w") as f:
-        f.write(
-            "import sys\n"
-            "cur, acc = None, 0\n"
-            "def flush():\n"
-            "    if cur is not None:\n"
-            "        print(f'{cur}\\t{acc}')\n"
-            "for line in sys.stdin:\n"
-            "    k, v = line.rstrip('\\n').split('\\t', 1)\n"
-            "    if k != cur:\n"
-            "        flush(); cur, acc = k, 0\n"
-            "    acc += int(v)\n"
-            "flush()\n"
-        )
+    mapper = (
+        "import sys\n"
+        "for line in sys.stdin:\n"
+        "    for w in line.lower().split():\n"
+        "        print(f'{w}\\t1')\n"
+    )
+    reducer = (
+        "import sys\n"
+        "cur, acc = None, 0\n"
+        "def flush():\n"
+        "    if cur is not None:\n"
+        "        print(f'{cur}\\t{acc}')\n"
+        "for line in sys.stdin:\n"
+        "    k, v = line.rstrip('\\n').split('\\t', 1)\n"
+        "    if k != cur:\n"
+        "        flush(); cur, acc = k, 0\n"
+        "    acc += int(v)\n"
+        "flush()\n"
+    )
     # r14: catalog.spread — otherwise ONE external pipe process maps the
     # whole corpus (the reference always passes num_maples > 1)
     docs = spread(table(spark, sf_dir, "documents").select("text"))
-    kv = maple_pipe(docs, f"{sys.executable} {mapper}")
-    out = juice_pipe(kv, f"{sys.executable} {reducer}", num_juices=8)
+    # each program travels in its command line (pipe shlex-splits it), so
+    # no call writes a file another call's lazy pipe may be starting
+    kv = maple_pipe(docs, f"{sys.executable} -c {shlex.quote(mapper)}")
+    out = juice_pipe(kv, f"{sys.executable} -c {shlex.quote(reducer)}", num_juices=8)
     return out.select(
         F.col("key").alias("word"), F.col("value").cast("bigint").alias("cnt")
     )
@@ -341,25 +337,28 @@ def sdfs_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     put→merge→compact→get chain breaks the hash. Balance totals travel
     as exact decimal sums (dec_sum pattern) — no order-dependent float
     folds."""
-    from ..sdfs import Sdfs
-    from ..streaming.events import scratch_dir
+    import tempfile
 
-    fs = Sdfs(spark, scratch_dir("grapefruit_sdfs_sim_"))
+    from ..reliability import pin
+    from ..sdfs import Sdfs
+
     cust = table(spark, sf_dir, "customer")
-    fs.put(cust, "cust_sim")
     updates = cust.where(F.col("c_custkey") % 10 == 0).withColumn(
         "c_acctbal", F.col("c_acctbal") + F.lit(1000.0)
     )
-    fs.merge("cust_sim", updates, ["c_custkey"])
-    fs.compact("cust_sim", target_files=2)
-    final = fs.get("cust_sim")
-    return final.select(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum((F.col("c_custkey") % 10 == 0).cast("long")).alias("n_bumped"),
-        F.round(F.sum(F.col("c_acctbal").cast("decimal(18,6)")), 2)
-        .cast("double")
-        .alias("bal_total"),
-    )
+    with tempfile.TemporaryDirectory(prefix="grapefruit_sdfs_sim_") as wh:
+        fs = Sdfs(spark, wh)
+        fs.put(cust, "cust_sim")
+        fs.merge("cust_sim", updates, ["c_custkey"])
+        fs.compact("cust_sim", target_files=2)
+        final = fs.get("cust_sim").select(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum((F.col("c_custkey") % 10 == 0).cast("long")).alias("n_bumped"),
+            F.round(F.sum(F.col("c_acctbal").cast("decimal(18,6)")), 2)
+            .cast("double")
+            .alias("bal_total"),
+        )
+        return pin(final)  # reads no file of the namespace removed here
 
 
 ORACLE["sdfs_sim"] = """
@@ -384,7 +383,8 @@ def cli_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ls``/``store`` the namespace and ``info``/``members`` the node —
     every step THROUGH cli.main()'s argv surface, nothing called as a
     library. The returned frame is the juice output read back from the
-    warehouse, hash-checked against mj_wordcount's oracle, so a row
+    temporary warehouse and pinned before that warehouse is removed,
+    hash-checked against mj_wordcount's oracle, so a row
     lost anywhere in put→maple→juice→get breaks the gate; the
     introspection JSON shapes (CLI surface of MembershipServer.java's
     ls/info) are asserted in-sim and any violation raises into the
@@ -397,12 +397,12 @@ def cli_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     import contextlib
     import io
     import json
+    import tempfile
 
     from ..cli import main as cli_main
+    from ..reliability import pin
     from ..sdfs import Sdfs
-    from ..streaming.events import scratch_dir
 
-    wh = scratch_dir("grapefruit_cli_sim_")
     exe = "grapefruit_spark.operators.mapreduce_apps"
 
     def run(argv: list[str]) -> str:
@@ -413,30 +413,30 @@ def cli_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(f"cli {argv[0]!r} exited {rc}")
         return buf.getvalue()
 
-    run(["--warehouse", wh, "put", f"{sf_dir}/documents.parquet", "docs"])
-    run(
-        ["--warehouse", wh, "maple", f"{exe}:cli_wc_maple", "4", "kv", "docs",
-         "--schema", "key string, value int"]
-    )
-    run(
-        ["--warehouse", wh, "juice", f"{exe}:cli_wc_juice", "4", "kv", "counts",
-         "--schema", "word string, cnt bigint", "--delete-input"]
-    )
-    parts = run(["--warehouse", wh, "ls", "counts"]).strip().splitlines()
-    if not parts:
-        raise RuntimeError("ls counts: no part files")
-    names = set(run(["--warehouse", wh, "store"]).split())
-    if "counts" not in names or "kv" in names:
-        raise RuntimeError(f"namespace after delete-input: {sorted(names)}")
-    node = json.loads(run(["info"]))
-    if node.get("status") != "ALIVE" or not node.get("app_id"):
-        raise RuntimeError(f"info: {node}")
-    mem = json.loads(run(["members"]))
-    if len(mem) < 1 or any(e.get("status") != "ALIVE" for e in mem):
-        raise RuntimeError(f"members: {mem}")
-    # the returned frame reads from the scratch warehouse — cleanup
-    # stays with scratch_dir's atexit fallback
-    return Sdfs(spark, wh).get("counts")
+    with tempfile.TemporaryDirectory(prefix="grapefruit_cli_sim_") as wh:
+        run(["--warehouse", wh, "put", f"{sf_dir}/documents.parquet", "docs"])
+        run(
+            ["--warehouse", wh, "maple", f"{exe}:cli_wc_maple", "4", "kv", "docs",
+             "--schema", "key string, value int"]
+        )
+        run(
+            ["--warehouse", wh, "juice", f"{exe}:cli_wc_juice", "4", "kv", "counts",
+             "--schema", "word string, cnt bigint", "--delete-input"]
+        )
+        parts = run(["--warehouse", wh, "ls", "counts"]).strip().splitlines()
+        if not parts:
+            raise RuntimeError("ls counts: no part files")
+        names = set(run(["--warehouse", wh, "store"]).split())
+        if "counts" not in names or "kv" in names:
+            raise RuntimeError(f"namespace after delete-input: {sorted(names)}")
+        node = json.loads(run(["info"]))
+        if node.get("status") != "ALIVE" or not node.get("app_id"):
+            raise RuntimeError(f"info: {node}")
+        mem = json.loads(run(["members"]))
+        if len(mem) < 1 or any(e.get("status") != "ALIVE" for e in mem):
+            raise RuntimeError(f"members: {mem}")
+        # reads no file of the warehouse removed here
+        return pin(Sdfs(spark, wh).get("counts"))
 
 
 ORACLE["cli_sim"] = ORACLE["mj_wordcount"]

@@ -354,14 +354,16 @@ def ingest_pipeline_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (hash-based admission; the temp state dir never influences
     results). rows-only: the near-dup layer uses our MinHash family.
     """
-    from ..sdfs import Sdfs
-    from ..streaming.events import scratch_dir
+    import tempfile
 
-    fs = Sdfs(spark, scratch_dir("grapefruit_ingest_sim_"))
+    from ..sdfs import Sdfs
+
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    n1 = ingest_corpus(fs, "sim", docs.where(F.col("doc_id") % 2 == 0)).count()
-    n2 = ingest_corpus(fs, "sim", docs.where(F.col("doc_id") % 2 == 1)).count()
-    n_state = fs.get("sim_sigs").count()
+    with tempfile.TemporaryDirectory(prefix="grapefruit_ingest_sim_") as wh:
+        fs = Sdfs(spark, wh)
+        n1 = ingest_corpus(fs, "sim", docs.where(F.col("doc_id") % 2 == 0)).count()
+        n2 = ingest_corpus(fs, "sim", docs.where(F.col("doc_id") % 2 == 1)).count()
+        n_state = fs.get("sim_sigs").count()
     return spark.createDataFrame(
         [(n1, n2, n_state)],
         "batch1_admitted long, batch2_admitted long, corpus_sigs long",
@@ -375,16 +377,18 @@ def ingest_spans_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     report tokens removed per batch plus the final span-state size.
     Deterministic for a given corpus. rows-only: multi-batch stateful.
     """
-    from ..sdfs import Sdfs
-    from ..streaming.events import scratch_dir
+    import tempfile
 
-    fs = Sdfs(spark, scratch_dir("grapefruit_spans_sim_"))
+    from ..sdfs import Sdfs
+
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    b1 = ingest_span_dedup(fs, "spanstate", docs.where(F.col("doc_id") % 2 == 0))
-    r1 = b1.agg(F.count(F.lit(1)), F.sum("n_removed")).collect()[0]
-    b2 = ingest_span_dedup(fs, "spanstate", docs.where(F.col("doc_id") % 2 == 1))
-    r2 = b2.agg(F.count(F.lit(1)), F.sum("n_removed")).collect()[0]
-    n_state = fs.get("spanstate").count()
+    with tempfile.TemporaryDirectory(prefix="grapefruit_spans_sim_") as wh:
+        fs = Sdfs(spark, wh)
+        b1 = ingest_span_dedup(fs, "spanstate", docs.where(F.col("doc_id") % 2 == 0))
+        r1 = b1.agg(F.count(F.lit(1)), F.sum("n_removed")).collect()[0]
+        b2 = ingest_span_dedup(fs, "spanstate", docs.where(F.col("doc_id") % 2 == 1))
+        r2 = b2.agg(F.count(F.lit(1)), F.sum("n_removed")).collect()[0]
+        n_state = fs.get("spanstate").count()
     return spark.createDataFrame(
         [(int(r1[0]), int(r1[1] or 0), int(r2[0]), int(r2[1] or 0), n_state)],
         "batch1_docs long, batch1_removed long, batch2_docs long, "

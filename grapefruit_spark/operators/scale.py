@@ -91,10 +91,11 @@ def scale_skew_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain GROUP BY + JOIN.
     """
     import os
+    import tempfile
     import uuid
 
     from ..catalog import table
-    from ..streaming.events import scratch_dir
+    from ..reliability import pin
 
     li = table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
@@ -110,21 +111,25 @@ def scale_skew_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("l_suppkey", "s_suppkey")
     supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     # tables of this call only, named and stored apart from every other
-    # call's: the frame returned reads them whenever it runs
-    base = scratch_dir("gf_scale_sim_")
+    # call's; the pinned result reads neither, so both go before it returns
     srev_t, supp_t = (f"gf_scale_sim_{t}_{uuid.uuid4().hex}" for t in ("srev", "supp"))
-    write_bucketed(srev, srev_t, "s_suppkey", 8, path=os.path.join(base, "srev"))
-    write_bucketed(supp, supp_t, "s_suppkey", 8, path=os.path.join(base, "supp"))
-    joined = bucketed_join(spark, srev_t, supp_t, "s_suppkey")
-    return (
-        joined.groupBy("s_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_suppliers"),
-            F.sum("n_items").alias("n_items"),
-            F.round(F.sum("rev_dec"), 2).cast("double").alias("revenue"),
-        )
-        .orderBy("s_nationkey")
-    )
+    with tempfile.TemporaryDirectory(prefix="gf_scale_sim_") as base:
+        try:
+            write_bucketed(srev, srev_t, "s_suppkey", 8, path=os.path.join(base, "srev"))
+            write_bucketed(supp, supp_t, "s_suppkey", 8, path=os.path.join(base, "supp"))
+            joined = bucketed_join(spark, srev_t, supp_t, "s_suppkey")
+            return pin(
+                joined.groupBy("s_nationkey")
+                .agg(
+                    F.count(F.lit(1)).alias("n_suppliers"),
+                    F.sum("n_items").alias("n_items"),
+                    F.round(F.sum("rev_dec"), 2).cast("double").alias("revenue"),
+                )
+                .orderBy("s_nationkey")
+            )
+        finally:
+            for t in (srev_t, supp_t):
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 ORACLE["scale_skew_sim"] = """

@@ -581,17 +581,15 @@ def stream_attribution_outer_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     (impossible user −1, ids below every real id), which advances both
     side watermarks past every real click so the tail's outer rows
     flush. Oracle: the equivalent batch LEFT JOIN."""
+    import tempfile
     import time as _time
 
     from ..streaming.events import (
         land_file,
         run_to_memory,
-        scratch_dir,
-        scratch_release,
         stream_stream_attribution_outer,
     )
 
-    src = scratch_dir("grapefruit_attr_outer_sim_")
     ev = table(spark, sf_dir, "events")
     hi, lo_id = ev.agg(F.max(F.unix_micros("ts")), F.min("event_id")).first()
     sent_us = hi + 2 * 86_400 * 1_000_000
@@ -608,16 +606,16 @@ def stream_attribution_outer_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("string").alias("props"),
     )
     now = _time.time()
-    land_file(ev, src, "b1.parquet", now - 100)
-    land_file(sentinels, src, "b2.parquet", now - 50)
-    out = run_to_memory(
-        stream_stream_attribution_outer(
-            spark, src, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "drv_stream_attr_outer",
-        output_mode="append",
-    )
-    scratch_release(src)
+    with tempfile.TemporaryDirectory(prefix="grapefruit_attr_outer_sim_") as src:
+        land_file(ev, src, "b1.parquet", now - 100)
+        land_file(sentinels, src, "b2.parquet", now - 50)
+        out = run_to_memory(
+            stream_stream_attribution_outer(
+                spark, src, glob="*.parquet", max_files_per_trigger=1
+            ),
+            "drv_stream_attr_outer",
+            output_mode="append",
+        )
     return out.where(
         F.col("click_ts") < F.timestamp_micros(F.lit(sent_us))
     ).select(
@@ -657,13 +655,12 @@ def stream_dedup_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     state; older ones fall to the late-data filter. Either branch keeps
     the output identical to the deduped source, so the oracle is simply
     the events table."""
+    import tempfile
     import time as _time
 
     from ..streaming.events import (
         land_file,
         run_to_memory,
-        scratch_dir,
-        scratch_release,
         stream_dedup_within_watermark,
     )
 
@@ -673,20 +670,17 @@ def stream_dedup_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FIRST-delivery rows older than the horizon would be late-dropped —
     # the output would no longer equal the deduped source. land_file
     # collapses any layout to a single file with a controlled mtime.
-    src = scratch_dir("grapefruit_wmdedup_sim_")
     ev = table(spark, sf_dir, "events")
     now = _time.time()
-    land_file(ev, src, "events_b1.parquet", now - 100)
-    land_file(ev, src, "events_b2.parquet", now - 50)
-    out = run_to_memory(
-        stream_dedup_within_watermark(spark, src, max_files_per_trigger=1),
-        "drv_stream_wmdedup",
-        output_mode="append",
-    )
-    # the availableNow drain is complete and the memory sink holds the
-    # rows — the replay files are dead weight from here
-    scratch_release(src)
-    return out
+    # the memory sink holds the drained rows: the frame reads no file
+    with tempfile.TemporaryDirectory(prefix="grapefruit_wmdedup_sim_") as src:
+        land_file(ev, src, "events_b1.parquet", now - 100)
+        land_file(ev, src, "events_b2.parquet", now - 50)
+        return run_to_memory(
+            stream_dedup_within_watermark(spark, src, max_files_per_trigger=1),
+            "drv_stream_wmdedup",
+            output_mode="append",
+        )
 
 
 ORACLE["stream_dedup_sim"] = (
@@ -702,31 +696,29 @@ def stream_rollup_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     the maintained sum exact and merge-order-independent, so the oracle
     is the ONE-SHOT batch rollup over everything."""
     import os
+    import tempfile
 
+    from ..reliability import pin
     from ..sdfs import Sdfs
-    from ..streaming.events import maintain_event_rollup, scratch_dir, scratch_release
+    from ..streaming.events import maintain_event_rollup
 
-    base = scratch_dir("grapefruit_rollup_sim_")
-    src = os.path.join(base, "src")
     ev = table(spark, sf_dir, "events")
-    ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-    ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    fs = Sdfs(spark, os.path.join(base, "wh"))
-    maintain_event_rollup(
-        spark, src, fs, "rollup_sim", os.path.join(base, "ckpt"),
-        max_files_per_trigger=1,
-    )
-    # the increments and the stream checkpoint are consumed; only the
-    # warehouse (which the RETURNED frame reads) must outlive this call —
-    # base itself stays registered for the atexit fallback
-    scratch_release(src)
-    scratch_release(os.path.join(base, "ckpt"))
-    return fs.get("rollup_sim").select(
-        "event_type",
-        "hour",
-        "n_events",
-        F.round("sum_value", 2).cast("double").alias("sum_value"),
-    )
+    with tempfile.TemporaryDirectory(prefix="grapefruit_rollup_sim_") as base:
+        src = os.path.join(base, "src")
+        ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
+        ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
+        fs = Sdfs(spark, os.path.join(base, "wh"))
+        maintain_event_rollup(
+            spark, src, fs, "rollup_sim", os.path.join(base, "ckpt"),
+            max_files_per_trigger=1,
+        )
+        out = fs.get("rollup_sim").select(
+            "event_type",
+            "hour",
+            "n_events",
+            F.round("sum_value", 2).cast("double").alias("sum_value"),
+        )
+        return pin(out)  # reads no file of the warehouse removed here
 
 
 ORACLE["stream_rollup_sim"] = """
@@ -750,17 +742,11 @@ def stream_ttl_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_value is deliberately not emitted — the stateful op sums
     python floats in arrival order, which no cross-engine hash should
     depend on; the value math is pytest-covered instead."""
+    import tempfile
     import time as _time
 
-    from ..streaming.events import (
-        land_file,
-        run_to_memory,
-        scratch_dir,
-        scratch_release,
-        stream_sessions_ttl,
-    )
+    from ..streaming.events import land_file, run_to_memory, stream_sessions_ttl
 
-    src = scratch_dir("grapefruit_ttl_sim_")
     ev = table(spark, sf_dir, "events")
     hi, lo_id = ev.agg(F.max(F.unix_micros("ts")), F.min("event_id")).first()
     sent_us = hi + 2 * 86_400 * 1_000_000  # 2 days past the last event
@@ -785,12 +771,12 @@ def stream_ttl_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("string").alias("props"),
     )
     now = _time.time()
-    land_file(ev, src, "b1.parquet", now - 100)
-    land_file(sentinels, src, "b2.parquet", now - 50)
-    out = run_to_memory(
-        stream_sessions_ttl(spark, src), "drv_ttl_sim", output_mode="append"
-    )
-    scratch_release(src)
+    with tempfile.TemporaryDirectory(prefix="grapefruit_ttl_sim_") as src:
+        land_file(ev, src, "b1.parquet", now - 100)
+        land_file(sentinels, src, "b2.parquet", now - 50)
+        out = run_to_memory(
+            stream_sessions_ttl(spark, src), "drv_ttl_sim", output_mode="append"
+        )
     return out.where(F.col("start_us") < sent_us).select(
         "user_id", "n_events", "start_us", "end_us", "closed_by"
     )

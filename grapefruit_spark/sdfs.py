@@ -94,21 +94,14 @@ class Sdfs:
             d = os.path.join(d, sub)
 
     # -- file ops (SdfsServer.java put/get/delete) ----------------------
-    def put(self, df: DataFrame, name: str, mode: str = "overwrite",
-            partition_by: list[str] | None = None) -> None:
+    def put(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
         """Insert/update a dataset (reference: ``put local sdfsname``).
 
-        An overwrite writes beside and swaps (``_swap``), so readers never
-        see a half-written dataset and a ``df`` derived from this same
-        dataset can't be clobbered mid-plan by Spark's delete-then-write
+        Writes beside and swaps (``_swap``), so readers never see a
+        half-written dataset and a ``df`` derived from this same dataset
+        can't be clobbered mid-plan by Spark's delete-then-write
         overwrite."""
-        if mode == "overwrite":
-            self._rewrite(df, name, "__putting", partition_by)
-            return
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._path(name))
+        self._rewrite(df, name, "__putting", partition_by)
 
     def get(self, name: str) -> DataFrame:
         """Fetch a dataset (reference: ``get sdfsname local``)."""

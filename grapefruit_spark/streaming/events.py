@@ -562,45 +562,6 @@ def maintain_event_rollup(
     run_foreach_batch(ev, sink, checkpoint_dir)
 
 
-_SCRATCH_DIRS: list[str] = []
-
-
-def scratch_dir(prefix: str) -> str:
-    """mkdtemp with process-exit cleanup: the driver-gate sims stage
-    replay files / warehouses under /tmp, and without this every
-    invocation (gate + pytest + bench sweeps) would leak a full table
-    copy for the life of the machine."""
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    if not _SCRATCH_DIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH_DIRS]
-        )
-    _SCRATCH_DIRS.append(d)
-    return d
-
-
-def scratch_release(path: str) -> None:
-    """Remove a scratch path as soon as its consumer has fully drained —
-    a long session running every sim (driver gate + pytest + bench
-    sweeps) would otherwise hold many full table copies under /tmp
-    simultaneously until process exit. Only call once NOTHING will read
-    the path again (e.g. replay sources after run_to_memory's
-    availableNow drain — the memory sink holds the rows); sims whose
-    RETURNED DataFrame still reads from scratch (warehouse-backed
-    outputs) must leave cleanup to the atexit fallback."""
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-    try:
-        _SCRATCH_DIRS.remove(path)
-    except ValueError:
-        pass  # a subdir of a registered dir, or already released
-
-
 def land_file(df: DataFrame, src_dir: str, name: str, mtime: float) -> None:
     """Materialize ``df`` as ONE plain parquet file ``src_dir/name`` with
     an explicit mtime — the deterministic way to stage a multi-batch
@@ -611,13 +572,12 @@ def land_file(df: DataFrame, src_dir: str, name: str, mtime: float) -> None:
     import shutil
     import tempfile
 
-    stage = tempfile.mkdtemp(prefix="grapefruit_land_")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    part = globmod.glob(os.path.join(stage, "part-*.parquet"))[0]
-    os.makedirs(src_dir, exist_ok=True)
-    dest = os.path.join(src_dir, name)
-    shutil.move(part, dest)
-    shutil.rmtree(stage, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="grapefruit_land_") as stage:
+        df.coalesce(1).write.mode("overwrite").parquet(stage)
+        part = globmod.glob(os.path.join(stage, "part-*.parquet"))[0]
+        os.makedirs(src_dir, exist_ok=True)
+        dest = os.path.join(src_dir, name)
+        shutil.move(part, dest)
     os.utime(dest, (mtime, mtime))
 
 

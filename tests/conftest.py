@@ -26,10 +26,11 @@ def spark():
 
 def session_state(spark) -> dict:
     """What one client of a shared session could see another write: the
-    SQL confs, the temp views and whether any data is cached."""
+    SQL confs, the catalog's tables and temp views, and whether any data
+    is cached."""
     return {
         "confs": spark.conf.getAll,
-        "temp_views": sorted(t.name for t in spark.catalog.listTables() if t.isTemporary),
+        "tables": sorted(t.name for t in spark.catalog.listTables()),
         "cache_empty": spark._jsparkSession.sharedState().cacheManager().isEmpty(),
     }
 
@@ -45,7 +46,8 @@ def registry_frames(spark):
 
     Building is not plan-only: eager query functions run Spark jobs
     before they return (see ``test_no_hugeint_and_type_class_parity``),
-    and leave ~13-14 MB in pinned RDDs. The sweeps read only schemas and
+    and leave 13-14 MB in ~45 pinned RDDs, 9 of them the results of sims
+    that stage files (``test_sim_storage``). The sweeps read only schemas and
     plans, so those blocks are released here rather than held for the
     rest of the session; a frame that read one would fail. The session
     state around the build is kept in ``REGISTRY_BUILD_STATE``."""

@@ -78,7 +78,7 @@ def test_foreach_batch_custom_sink(spark, tmp_path):
     def sink(batch_df, epoch_id: int) -> None:
         seen_epochs.append(epoch_id)
         agg = batch_df.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-        fs.put(agg, f"events_agg_{epoch_id}", mode="overwrite")
+        fs.put(agg, f"events_agg_{epoch_id}")
 
     run_foreach_batch(read_event_stream(spark, SF_DIR), sink)
     assert seen_epochs
